@@ -26,6 +26,9 @@
                                          merged unit snapshots — ZERO extra
                                          corpus scans)
 
+Prints the summary as one JSON line on stdout and, on stderr, one line per
+manifested unit: unit id, docs, invalid docs, violations and wall_s.
+
 On a cluster the session comes from spark-submit's conf (master, executor
 counts, memory); this script only sets engine-level SQL conf.  Without
 --resume the output dir's manifests are ignored and everything reruns.
@@ -118,7 +121,7 @@ def main() -> None:
             "--snapshot-categorical so per-unit snapshots are written"
         )
 
-    from schemasaurus_spark.runstate import ResumableValidation
+    from schemasaurus_spark.runstate import ResumableValidation, RunState
 
     schema = None
     if args.schema:
@@ -155,6 +158,18 @@ def main() -> None:
         snapshot_prep=snapshot_prep,
     )
     summary = rv.run(spark, args.input, args.output, on_drift=args.on_drift)
+    # the manifests are the per-unit metrics log: one stderr line per unit.
+    # Wall times stay out of the summary so that it is a function of the
+    # input alone (manifests from before wall_s existed print None)
+    manifests = RunState(os.path.join(args.output, "manifests")).completed()
+    for m in sorted(manifests.values(), key=lambda m: m["completed_at"]):
+        u = m["metrics"]
+        print(
+            f"unit {m['unit_id']}: docs={u['n_docs']} "
+            f"invalid_docs={u['n_invalid_docs']} violations={u['n_violations']} "
+            f"wall_s={u.get('wall_s')}",
+            file=sys.stderr,
+        )
 
     if args.sequence_checks:
         from schemasaurus_spark.operators.span_integrity import (

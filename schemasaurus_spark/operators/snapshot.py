@@ -45,6 +45,11 @@ from schemasaurus_spark.operators.drift import (
     ks_significance,
     psi_from_counts,
 )
+from schemasaurus_spark.sources.io import local_frame
+
+_BINS_DDL = "column string, bin int, cnt long"
+_CATS_DDL = "column string, value string, cnt long"
+_GRID_DDL = "column string, lo double, hi double, n_bins int"
 
 
 @dataclass(frozen=True)
@@ -186,14 +191,26 @@ def compute_snapshot(df: DataFrame, spec: SnapshotSpec, grid: dict | None = None
     if grid is None:
         grid = _default_grid(df, spec)
     spark = df.sparkSession
-    empty_bins = spark.createDataFrame([], "column string, bin int, cnt long")
-    empty_cats = spark.createDataFrame([], "column string, value string, cnt long")
     return Snapshot(
         columns=_columns_part(df, spec),
-        bins=_bins_part(df, grid) if grid else empty_bins,
-        categories=_categories_part(df, spec) if spec.categorical else empty_cats,
+        bins=_bins_part(df, grid) if grid else local_frame(spark, [], _BINS_DDL),
+        categories=(
+            _categories_part(df, spec)
+            if spec.categorical
+            else local_frame(spark, [], _CATS_DDL)
+        ),
         grid=grid,
     )
+
+
+def write_grid(spark: SparkSession, grid: dict, path: str) -> None:
+    """Persist a bin grid (column -> (lo, hi, n_bins)) as one parquet file."""
+    rows = [(c, lo, hi, nb) for c, (lo, hi, nb) in grid.items()]
+    local_frame(spark, rows, _GRID_DDL).coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def read_grid(spark: SparkSession, path: str) -> dict:
+    return {r.column: (r.lo, r.hi, r.n_bins) for r in spark.read.parquet(path).collect()}
 
 
 def write_snapshot(
@@ -206,22 +223,16 @@ def write_snapshot(
     snap.categories.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "categories")
     )
-    spark = df.sparkSession
-    grid_rows = [(c, lo, hi, nb) for c, (lo, hi, nb) in snap.grid.items()]
-    spark.createDataFrame(
-        grid_rows, "column string, lo double, hi double, n_bins int"
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "grid"))
+    write_grid(df.sparkSession, snap.grid, os.path.join(path, "grid"))
     return snap.grid
 
 
 def read_snapshot(spark: SparkSession, path: str) -> Snapshot:
-    grid_df = spark.read.parquet(os.path.join(path, "grid"))
-    grid = {r.column: (r.lo, r.hi, r.n_bins) for r in grid_df.collect()}
     return Snapshot(
         columns=spark.read.parquet(os.path.join(path, "columns")),
         bins=spark.read.parquet(os.path.join(path, "bins")),
         categories=spark.read.parquet(os.path.join(path, "categories")),
-        grid=grid,
+        grid=read_grid(spark, os.path.join(path, "grid")),
     )
 
 

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from schemasaurus_spark.schema.columns import ColumnValidator
+from schemasaurus_spark.schema.columns import ColumnValidator, _empty
 
 # flagship document schema (FIXTURES.md §4) — mirrors the reference keyword
 # coverage over the north-rule table shape
@@ -71,17 +71,12 @@ class ValidationJob:
         """
         if not guarded:
             return self.validator.apply(docs)
-        from pyspark.sql import functions as _F
-
-        from schemasaurus_spark.schema.columns import _empty
-
         row_type = docs.schema
-        value = _F.struct(*[_F.col(f.name) for f in row_type.fields])
-        cnt = self.counter.errors(value, row_type, _F.lit(""))
-        full = self.validator.errors(value, row_type, _F.lit(""))
+        cnt = self.counter.row_errors(row_type)
+        full = self.validator.row_errors(row_type)
         return docs.withColumn(
-            "errors", _F.when(cnt > 0, full).otherwise(_empty())
-        ).withColumn("valid", _F.size(_F.col("errors")) == 0)
+            "errors", F.when(cnt > 0, full).otherwise(_empty())
+        ).withColumn("valid", F.size(F.col("errors")) == 0)
 
     def counted(self, docs: DataFrame) -> DataFrame:
         return self.counter.apply(docs)

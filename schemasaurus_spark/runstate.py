@@ -11,6 +11,18 @@ only the remainder; a unit that crashed mid-write is re-done from scratch
 (its partial violations dir is overwritten), so the protocol is
 idempotent at unit granularity.
 
+**Cost shape of a unit.**  One validation scan: the verdict counters
+(``n_docs``, ``n_invalid_docs``, ``n_violations``, ``n_partitions``) are an
+``Observation`` on the validated frame, collected by the violations write
+itself, so no separate verdict scan runs.  The optional snapshot adds its
+own scans of the unit (``snapshot_prep`` is an arbitrary ``df -> df``, so
+its aggregates cannot ride the violations write), which is why a unit
+still reads its input more than once.  The validator is compiled once per
+row type and reused by every unit, the snapshot bin grid is loaded or
+frozen once per ``run``, and grid frames are JVM-local (no Python worker).
+The manifest's ``metrics`` also carry the unit's ``wall_s``; ``run``'s
+returned summary carries counts only.
+
 At 10^12 docs the driver loop is over O(thousands) of units while each
 unit fans out to the cluster — the loop is control plane only, no data
 moves through the driver.
@@ -44,7 +56,8 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from schemasaurus_spark.plans.validation_job import ValidationJob
 
@@ -194,11 +207,14 @@ class ResumableValidation:
                     if name.startswith("unit=") and name[len("unit="):] not in current_ids:
                         shutil.rmtree(os.path.join(vdir, name), ignore_errors=True)
         pending = [u for u in units if u["unit_id"] not in done]
+        grid = None
         processed = 0
         for unit in pending:
             if fail_after_units is not None and processed >= fail_after_units:
                 raise RuntimeError(f"injected failure after {processed} units")
-            metrics = self._run_unit(spark, unit, out_dir)
+            if self.snapshot_spec is not None and grid is None:
+                grid = self._snapshot_grid(spark, unit, out_dir)
+            metrics = self._run_unit(spark, unit, out_dir, grid)
             state.mark_done(unit, metrics)
             processed += 1
         all_done = state.completed()
@@ -217,8 +233,9 @@ class ResumableValidation:
             },
         }
 
-    def _snapshot_grid(self, spark: SparkSession, docs: DataFrame, out_dir: str) -> dict:
-        """Load the frozen bin grid, or freeze it from the first unit.
+    def _snapshot_grid(self, spark: SparkSession, unit: dict, out_dir: str) -> dict:
+        """Load the frozen bin grid, or freeze it from ``unit`` (the first
+        pending one); ``run`` calls this once.
 
         Freezing from the first unit (not the whole input) keeps grid setup
         O(one unit) at 10^12 docs; later values outside that range land in
@@ -227,40 +244,51 @@ class ResumableValidation:
 
         grid_dir = os.path.join(out_dir, "snapshot_grid")
         if os.path.isdir(grid_dir):
-            g = spark.read.parquet(grid_dir)
-            return {r.column: (r.lo, r.hi, r.n_bins) for r in g.collect()}
+            return snap.read_grid(spark, grid_dir)
+        docs = spark.read.parquet(*unit["files"])
         grid = snap._default_grid(self.snapshot_prep(docs), self.snapshot_spec)
-        rows = [(c, lo, hi, nb) for c, (lo, hi, nb) in grid.items()]
-        spark.createDataFrame(
-            rows, "column string, lo double, hi double, n_bins int"
-        ).coalesce(1).write.mode("overwrite").parquet(grid_dir)
+        snap.write_grid(spark, grid, grid_dir)
         return grid
 
-    def _run_unit(self, spark: SparkSession, unit: dict, out_dir: str) -> dict:
+    def _run_unit(
+        self, spark: SparkSession, unit: dict, out_dir: str, grid: dict | None
+    ) -> dict:
+        t0 = time.perf_counter()
         docs = spark.read.parquet(*unit["files"])
+        # the verdict counters ride the violations write: observed on the
+        # validated frame before its ~valid filter, so they cover every row.
+        # n_partitions counts non-empty input partitions without a distinct
+        # aggregate: a partition's first row has monotonically_increasing_id
+        # low 33 bits (the in-partition row number) all zero
+        obs = Observation()
+        first_in_partition = (
+            F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1) == 0
+        )
+        validated = self.job.validated(docs).observe(
+            obs,
+            F.count(F.lit(1)).alias("n_docs"),
+            F.count(F.when(~F.col("valid"), 1)).alias("n_invalid_docs"),
+            F.coalesce(F.sum(F.size("errors")), F.lit(0)).alias("n_violations"),
+            F.count(F.when(first_in_partition, 1)).alias("n_partitions"),
+        )
         # violations sink (full error records), overwrite => crash-idempotent
-        violations = self.job.violations(self.job.validated(docs))
-        violations.write.mode("overwrite").parquet(
+        self.job.violations(validated).write.mode("overwrite").parquet(
             os.path.join(out_dir, "violations", f"unit={unit['unit_id']}")
         )
+        m = obs.get
         if self.snapshot_spec is not None:
             from schemasaurus_spark.operators.snapshot import write_snapshot
 
-            grid = self._snapshot_grid(spark, docs, out_dir)
             write_snapshot(
                 self.snapshot_prep(docs),
                 self.snapshot_spec,
                 os.path.join(out_dir, "snapshots", f"unit={unit['unit_id']}"),
                 grid=grid,
             )
-        # verdict metrics via the count-only fast path (no error structs)
-        verd = self.job.verdicts(self.job.counted(docs)).collect()
         return {
-            "n_docs": sum(r.n_docs for r in verd),
-            "n_invalid_docs": sum(r.n_invalid_docs for r in verd),
-            "n_violations": sum(r.n_violations for r in verd),
-            "n_partitions": len(verd),
-            "all_pass": all(r["pass"] for r in verd),
+            **m,
+            "all_pass": m["n_invalid_docs"] == 0,
+            "wall_s": round(time.perf_counter() - t0, 3),
         }
 
 

@@ -123,13 +123,13 @@ class ColumnValidator:
         #: state — the analog of ctx.parent in the walker)
         self.parent_value: Column | None = None
         self.parent_dtype = None
+        #: row_type.json() -> compiled row expression (see row_errors)
+        self._compiled: dict[str, Column] = {}
 
     # ------------------------------------------------------------------ api
 
     def apply(self, df, errors_col: str = "errors", valid_col: str = "valid"):
-        row_type = df.schema
-        value = F.struct(*[F.col(f.name) for f in row_type.fields])
-        errs = self.errors(value, row_type, F.lit(""))
+        errs = self.row_errors(df.schema)
         if self.count_only:
             return df.withColumn("n_violations", errs).withColumn(
                 valid_col, F.col("n_violations") == 0
@@ -140,6 +140,19 @@ class ColumnValidator:
 
     def errors(self, value: Column, dtype, path: Column) -> Column:
         return self._node(self.schema_root, dtype, value, path, is_root=True)
+
+    def row_errors(self, row_type: T.StructType) -> Column:
+        """The violation expression of a whole row of ``row_type`` (columns
+        are the instance's properties).  Compiled on the first frame of a
+        row type and reused for every later one: the expression refers to
+        columns by name only, so any frame of that type can select it, and
+        rebuilding its py4j tree costs driver time on every call."""
+        key = row_type.json()
+        errs = self._compiled.get(key)
+        if errs is None:
+            value = F.struct(*[F.col(f.name) for f in row_type.fields])
+            errs = self._compiled[key] = self.errors(value, row_type, F.lit(""))
+        return errs
 
     # ------------------------------------------------------- error building
 

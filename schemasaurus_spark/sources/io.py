@@ -117,3 +117,24 @@ def write_text_file(spark: SparkSession, path: str, text: str) -> None:
         out.write(bytearray(text.encode("utf-8")))
     finally:
         out.close()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A small driver-side table (bin grid, empty part) as a JVM-local frame.
+
+    The rows cross to the JVM as one Arrow batch and plan as a
+    ``LocalRelation``, so acting on the frame runs no Python worker;
+    ``createDataFrame(list)`` parallelizes pickled rows and starts one
+    (one-row parquet write, local[4] on a 4-vCPU VM: ~0.9 s that way,
+    ~0.16 s this way).  An empty ``rows`` plans the same way, which an
+    empty pandas frame does not."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table)

@@ -140,3 +140,109 @@ def test_per_unit_snapshots_merge_to_whole_and_survive_resume(spark, docs_path, 
         {(r.column, r.value): r.cnt for r in merged.categories.collect()}
         == {(r.column, r.value): r.cnt for r in whole.categories.collect()}
     )
+
+
+def _verdict_fold(spark, files):
+    """The manifest metrics as a separate count-only verdict scan computes
+    them: the oracle for the counters observed on the violations write."""
+    job = ValidationJob()
+    verd = job.verdicts(job.counted(spark.read.parquet(*files))).collect()
+    return {
+        "n_docs": sum(r.n_docs for r in verd),
+        "n_invalid_docs": sum(r.n_invalid_docs for r in verd),
+        "n_violations": sum(r.n_violations for r in verd),
+        "n_partitions": len(verd),
+        "all_pass": all(r["pass"] for r in verd),
+    }
+
+
+def test_manifest_metrics_match_verdict_scan(spark, tmp_path):
+    """Every unit's manifest counters equal the verdict-scan fold, for units
+    of several input partitions and for a unit whose only file has 0 rows."""
+    import shutil
+
+    from schemasaurus_spark.runstate import RunState
+
+    p = str(tmp_path / "docs.parquet")
+    docs = generate_documents(spark, 3000, seed=21)
+    docs.repartition(6).write.parquet(p)
+    empty = str(tmp_path / "empty.parquet")
+    docs.limit(0).coalesce(1).write.parquet(empty)
+    (part,) = [f for f in os.listdir(empty) if f.endswith(".parquet")]
+    shutil.copy(os.path.join(empty, part), os.path.join(p, "zz-empty.parquet"))
+
+    out = str(tmp_path / "out")
+    ResumableValidation(files_per_unit=3).run(spark, p, out)
+    manifests = RunState(os.path.join(out, "manifests")).completed()
+    assert len(manifests) == 3
+    for m in manifests.values():
+        want = _verdict_fold(spark, m["files"])
+        assert {k: m["metrics"][k] for k in want} == want, m["files"]
+        assert m["metrics"]["wall_s"] >= 0
+    empty_unit, *full_units = sorted(manifests.values(), key=lambda m: len(m["files"]))
+    assert [os.path.basename(f) for f in empty_unit["files"]] == ["zz-empty.parquet"]
+    assert empty_unit["metrics"]["n_partitions"] == 0
+    assert empty_unit["metrics"]["all_pass"] is True
+    assert [m["metrics"]["n_partitions"] for m in full_units] == [3, 3]
+    assert sum(m["metrics"]["n_docs"] for m in full_units) == 3000
+    assert not all(m["metrics"]["all_pass"] for m in full_units)
+
+
+def test_crash_between_unit_write_and_manifest(spark, docs_path, tmp_path, monkeypatch):
+    """A unit whose violations and snapshot are written but whose manifest
+    is not is redone on resume, and nothing from the crashed attempt is
+    counted: totals, violation rows and the merged snapshot each see every
+    input row exactly once."""
+    from schemasaurus_spark.operators.snapshot import SnapshotSpec
+    from schemasaurus_spark.runstate import RunState, merged_snapshot
+
+    spec = SnapshotSpec(numeric=("n_spans",), categorical=("first_kind",), n_bins=32)
+    prep = lambda df: df.select(
+        F.size("spans").alias("n_spans"),
+        F.col("spans")[0]["kind"].alias("first_kind"),
+    )
+    out = str(tmp_path / "out")
+    rv = ResumableValidation(files_per_unit=2, snapshot_spec=spec, snapshot_prep=prep)
+
+    real_mark_done = RunState.mark_done
+    calls = []
+
+    def mark_done_crashing_once(self, unit, metrics):
+        calls.append(unit["unit_id"])
+        if len(calls) == 2:
+            raise RuntimeError("crash before manifest")
+        real_mark_done(self, unit, metrics)
+
+    monkeypatch.setattr(RunState, "mark_done", mark_done_crashing_once)
+    with pytest.raises(RuntimeError, match="crash before manifest"):
+        rv.run(spark, docs_path, out)
+    crashed = calls[1]
+    assert os.listdir(os.path.join(out, "manifests")) == [f"{calls[0]}.json"]
+    for sub in ("violations", "snapshots"):
+        assert os.path.isdir(os.path.join(out, sub, f"unit={crashed}"))
+
+    summary = rv.run(spark, docs_path, out)
+    assert summary["n_skipped"] == 1
+    assert summary["n_processed"] == 3
+    assert calls[2] == crashed  # redone first, in listing order
+    assert crashed in RunState(os.path.join(out, "manifests")).completed()
+
+    job = ValidationJob()
+    direct = job.counted(spark.read.parquet(docs_path)).agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum((~F.col("valid")).cast("long")).alias("n_invalid"),
+        F.sum("n_violations").alias("n_viol"),
+    ).collect()[0]
+    assert summary["totals"] == {
+        "n_docs": direct.n_docs,
+        "n_invalid_docs": direct.n_invalid,
+        "n_violations": direct.n_viol,
+    }
+    assert violations_table(spark, out).count() == summary["totals"]["n_violations"]
+
+    merged = merged_snapshot(spark, out)
+    assert {r.column: r.n for r in merged.columns.collect()} == {
+        "n_spans": 4000, "first_kind": 4000,
+    }
+    assert merged.bins.agg(F.sum("cnt")).first()[0] == 4000
+    assert merged.categories.agg(F.sum("cnt")).first()[0] == 4000
