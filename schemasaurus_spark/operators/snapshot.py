@@ -6,35 +6,54 @@ per-partition lineage + metrics manifests".  ``operators/drift.py`` holds
 the statistics; this module makes the *snapshot* a first-class, mergeable
 artifact so drift never rescans the baseline corpus.
 
-A snapshot of a corpus slice is a small parquet dataset with three parts:
+A snapshot of a corpus slice is ONE small parquet dataset in long form:
+one row per ``(part, column, key)``, with the fixed schema
+``_SNAPSHOT_DDL`` (read back without schema inference):
 
-* ``columns/``    one row per tracked column: ``(column, kind, n, n_null,
-  min_s, max_s, hll)`` — ``hll`` is a Datasketches HyperLogLog sketch
-  (``hll_sketch_agg``), the 100 TB distinct-count path, stored as binary so
-  later snapshots UNION it instead of recounting.
-* ``bins/``       per numeric column: counts on a FIXED bin grid.  The grid
-  (lo, hi, n_bins — recorded in ``grid/``) is frozen when the baseline is
-  written; every later snapshot of new data histograms onto the same edges.
-* ``categories/`` per categorical column: ``(column, value, cnt)``.
+* ``part='columns'``    one row per tracked column: ``kind, n, n_null,
+  min_s, max_s, hll`` — ``min_s``/``max_s`` are the typed min/max cast to
+  string, ``hll`` a Datasketches HyperLogLog sketch (``hll_sketch_agg``
+  over the value cast to string), the 100 TB distinct-count path, stored
+  as binary so later snapshots UNION it instead of recounting.
+* ``part='bins'``       per numeric column and ``bin``: the count ``n`` on
+  a FIXED bin grid.  NULLs are left out.  The grid is frozen when the
+  baseline is written; every later snapshot of new data histograms onto
+  the same edges.
+* ``part='categories'`` per categorical column and ``value`` (NULL kept):
+  the count ``n``.
+* ``part='grid'``       per numeric column: ``lo, hi, n_bins``.
+
+A ``Snapshot`` holds that frame without the grid rows, and the grid as a
+dict; ``Snapshot.columns`` / ``bins`` / ``categories`` are views over the
+frame with the per-part schemas (``cnt`` for the counts), so merging,
+gating and drift read a snapshot the same way whether it was just
+computed, read back or merged.
 
 Why this shape at 100 TB: every component is an algebraic aggregate —
 HLL register-max, bin-count sum, category-count sum, min-of-mins,
 max-of-maxes, count sums — so per-unit snapshots written by the resumable
 runner merge into the corpus snapshot with a metadata-sized shuffle and NO
 rescan of data files, and the baseline side of a drift check is never read
-again at all.  Each snapshot pass itself is one scan: a single ``agg`` for
-``columns/`` plus one map-side-combinable groupBy per histogram family.
+again at all.  A snapshot pass is one action over two aggregates of the
+input (``_snapshot_frame``): the per-column stats, HLL sketches included,
+as one global aggregate, and the bin and category counts as one explode +
+hash aggregate.  The sketch's object aggregate is kept apart from the
+counts' groups because Spark sorts an object aggregate's input once a task
+holds more than 128 groups.  ``write_snapshot`` writes both, with the grid
+rows unioned in from a JVM-local frame, as one dataset in one write job
+(plus AQE's two shuffle-map stages, which run side by side).
 
 Drift (``drift_vs_snapshot``): numeric columns get a two-sample KS test on
 the binned ECDFs (resolution = bin width; exact given the shared grid),
 categorical columns get the chi-square from ``drift.py``; both report the
-statistic, p-value, and null-rate / distinct-estimate deltas.
+statistic, p-value, and null-rate / distinct-estimate deltas.  Each side
+is collected in one action.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,9 +66,11 @@ from schemasaurus_spark.operators.drift import (
 )
 from schemasaurus_spark.sources.io import local_frame
 
-_BINS_DDL = "column string, bin int, cnt long"
-_CATS_DDL = "column string, value string, cnt long"
-_GRID_DDL = "column string, lo double, hi double, n_bins int"
+_SNAPSHOT_DDL = (
+    "part string, column string, kind string, bin int, value string, n long, "
+    "n_null long, min_s string, max_s string, hll binary, "
+    "lo double, hi double, n_bins int"
+)
 
 
 @dataclass(frozen=True)
@@ -64,7 +85,7 @@ class SnapshotSpec:
     def __post_init__(self):
         # an empty spec would hand df.agg() zero aggregates (a confusing
         # engine error three frames deep), and a column tracked as BOTH
-        # kinds would emit duplicate aliases in the wide aggregate
+        # kinds has no single kind for its columns row
         if not self.numeric and not self.categorical:
             raise ValueError(
                 "SnapshotSpec tracks no columns — pass numeric=... and/or "
@@ -80,44 +101,30 @@ class SnapshotSpec:
 
 @dataclass
 class Snapshot:
-    columns: DataFrame
-    bins: DataFrame
-    categories: DataFrame
+    """A snapshot as its long-form ``frame`` (one row per ``(part, column,
+    key)``, grid rows left out) plus the ``grid``; ``columns``, ``bins`` and
+    ``categories`` are views over the frame with the per-part schemas."""
+
+    frame: DataFrame
     grid: dict = field(default_factory=dict)  # col -> (lo, hi, n_bins)
 
-
-def _columns_part(df: DataFrame, spec: SnapshotSpec) -> DataFrame:
-    rows = []
-    aggs = []
-    for kind, cols in (("numeric", spec.numeric), ("categorical", spec.categorical)):
-        for c in cols:
-            # sketch the string form: hll_sketch_agg accepts int/long/string/
-            # binary but not double, and the cast keeps one deterministic
-            # code path for every column type
-            aggs += [
-                F.count(F.lit(1)).alias(f"{c}__n"),
-                F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
-                F.min(c).cast("string").alias(f"{c}__min"),
-                F.max(c).cast("string").alias(f"{c}__max"),
-                F.hll_sketch_agg(F.col(c).cast("string"), F.lit(spec.lg_k)).alias(
-                    f"{c}__hll"
-                ),
-            ]
-            rows.append((c, kind))
-    wide = df.agg(*aggs)
-    structs = [
-        F.struct(
-            F.lit(c).alias("column"),
-            F.lit(kind).alias("kind"),
-            F.col(f"{c}__n").alias("n"),
-            F.col(f"{c}__nulls").alias("n_null"),
-            F.col(f"{c}__min").alias("min_s"),
-            F.col(f"{c}__max").alias("max_s"),
-            F.col(f"{c}__hll").alias("hll"),
+    @property
+    def columns(self) -> DataFrame:
+        return self.frame.where(F.col("part") == "columns").select(
+            "column", "kind", "n", "n_null", "min_s", "max_s", "hll"
         )
-        for c, kind in rows
-    ]
-    return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+
+    @property
+    def bins(self) -> DataFrame:
+        return self.frame.where(F.col("part") == "bins").select(
+            "column", "bin", F.col("n").alias("cnt")
+        )
+
+    @property
+    def categories(self) -> DataFrame:
+        return self.frame.where(F.col("part") == "categories").select(
+            "column", "value", F.col("n").alias("cnt")
+        )
 
 
 def _default_grid(df: DataFrame, spec: SnapshotSpec) -> dict:
@@ -139,50 +146,72 @@ def _default_grid(df: DataFrame, spec: SnapshotSpec) -> dict:
     return grid
 
 
-def _bins_part(df: DataFrame, grid: dict) -> DataFrame:
-    """Fixed-grid bin counts for every numeric column, one scan.
+def _snapshot_frame(df: DataFrame, spec: SnapshotSpec, grid: dict) -> DataFrame:
+    """The ``columns``, ``bins`` and ``categories`` rows of ``df``'s
+    snapshot on ``grid``, in long form: two aggregates, one action.
 
-    ``width_bucket`` maps values to 1..n_bins with 0 / n_bins+1 overflow
-    buckets, so data outside the frozen baseline range is still counted
-    (it lands in the edge buckets and shows up as drift, not as loss)."""
-    parts = []
-    for c, (lo, hi, n_bins) in grid.items():
-        parts.append(
+    The per-column stats are one global aggregate.  Its HLL sketch is an
+    object aggregate, which Spark sorts once a task holds more than
+    ``spark.sql.objectHashAggregate.sortBased.fallbackThreshold`` (128)
+    groups; with one group it never does, and an empty ``df`` still gets
+    its ``columns`` rows (``n`` 0, the rest NULL).  Bin and category counts
+    are one explode + hash aggregate (code-generated, any number of
+    groups): a ``bins`` element per grid column (``width_bucket``: 1..n_bins
+    and the 0 / n_bins+1 overflow buckets, so data outside the baseline
+    range is counted, not lost) and a ``categories`` element per
+    categorical column, each the same four fields whatever the number of
+    tracked columns.  In one aggregate the bin and category groups would
+    push the sketch past that threshold: with the default 256 bins, 2
+    numeric and 2 categorical columns over 400k rows (local[4], 4-vCPU VM),
+    ``write_snapshot`` took 1.75x as long."""
+    kinds = {c: "numeric" for c in spec.numeric}
+    kinds.update({c: "categorical" for c in spec.categorical})
+    # sketch the string form: hll_sketch_agg accepts int/long/string/
+    # binary but not double, and the cast keeps one deterministic
+    # code path for every column type
+    stats = df.agg(
+        *[
             F.struct(
+                F.lit("columns").alias("part"),
                 F.lit(c).alias("column"),
-                F.when(
-                    F.col(c).isNull(), F.lit(None).cast("int")
-                ).otherwise(
-                    F.width_bucket(
-                        F.col(c).cast("double"), F.lit(lo), F.lit(hi), F.lit(n_bins)
-                    ).cast("int")
-                ).alias("bin"),
-            )
+                F.lit(kind).alias("kind"),
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col(c).isNull().cast("long")).alias("n_null"),
+                F.min(c).cast("string").alias("min_s"),
+                F.max(c).cast("string").alias("max_s"),
+                F.hll_sketch_agg(F.col(c).cast("string"), F.lit(spec.lg_k)).alias("hll"),
+            ).alias(f"s{i}")
+            for i, (c, kind) in enumerate(kinds.items())
+        ]
+    )
+    columns = stats.select(F.explode(F.array(*stats.columns)).alias("e")).select("e.*")
+
+    def element(part, c, bin=F.lit(None).cast("int"), value=F.lit(None).cast("string")):
+        return F.struct(
+            F.lit(part).alias("part"),
+            F.lit(c).alias("column"),
+            bin.alias("bin"),
+            value.alias("value"),
         )
-    if not parts:
-        return None
-    return (
-        df.select(F.explode(F.array(*parts)).alias("s"))
-        .select("s.*")
-        .where(F.col("bin").isNotNull())
-        .groupBy("column", "bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
 
-
-def _categories_part(df: DataFrame, spec: SnapshotSpec) -> DataFrame:
-    parts = [
-        F.struct(F.lit(c).alias("column"), F.col(c).cast("string").alias("value"))
-        for c in spec.categorical
+    elements = [
+        element("bins", c, bin=F.width_bucket(
+            F.col(c).cast("double"), F.lit(lo), F.lit(hi), F.lit(n_bins)
+        ).cast("int"))
+        for c, (lo, hi, n_bins) in grid.items()
     ]
-    if not parts:
-        return None
-    return (
-        df.select(F.explode(F.array(*parts)).alias("s"))
-        .select("s.*")
-        .groupBy("column", "value")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    elements += [element("categories", c, value=F.col(c).cast("string")) for c in spec.categorical]
+    if not elements:
+        return columns
+    counts = (
+        df.select(F.explode(F.array(*elements)).alias("e"))
+        .select("e.*")
+        # NULL and NaN values get no bin
+        .where((F.col("part") != "bins") | F.col("bin").isNotNull())
+        .groupBy("part", "column", "bin", "value")
+        .agg(F.count(F.lit(1)).alias("n"))
     )
+    return columns.unionByName(counts, allowMissingColumns=True)
 
 
 def compute_snapshot(df: DataFrame, spec: SnapshotSpec, grid: dict | None = None) -> Snapshot:
@@ -190,50 +219,42 @@ def compute_snapshot(df: DataFrame, spec: SnapshotSpec, grid: dict | None = None
     data so bin counts stay mergeable/comparable; omit it for a baseline."""
     if grid is None:
         grid = _default_grid(df, spec)
-    spark = df.sparkSession
-    return Snapshot(
-        columns=_columns_part(df, spec),
-        bins=_bins_part(df, grid) if grid else local_frame(spark, [], _BINS_DDL),
-        categories=(
-            _categories_part(df, spec)
-            if spec.categorical
-            else local_frame(spark, [], _CATS_DDL)
-        ),
-        grid=grid,
-    )
-
-
-def write_grid(spark: SparkSession, grid: dict, path: str) -> None:
-    """Persist a bin grid (column -> (lo, hi, n_bins)) as one parquet file."""
-    rows = [(c, lo, hi, nb) for c, (lo, hi, nb) in grid.items()]
-    local_frame(spark, rows, _GRID_DDL).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def read_grid(spark: SparkSession, path: str) -> dict:
-    return {r.column: (r.lo, r.hi, r.n_bins) for r in spark.read.parquet(path).collect()}
+    return Snapshot(_snapshot_frame(df, spec, grid), grid)
 
 
 def write_snapshot(
     df: DataFrame, spec: SnapshotSpec, path: str, grid: dict | None = None
 ) -> dict:
-    """Compute + persist a snapshot; returns the grid actually used."""
-    snap = compute_snapshot(df, spec, grid)
-    snap.columns.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "columns"))
-    snap.bins.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "bins"))
-    snap.categories.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "categories")
+    """Compute + persist a snapshot as one dataset; returns the grid used."""
+    if grid is None:
+        grid = _default_grid(df, spec)
+    grid_rows = local_frame(
+        df.sparkSession,
+        [("grid", c, lo, hi, nb) for c, (lo, hi, nb) in grid.items()],
+        "part string, column string, lo double, hi double, n_bins int",
     )
-    write_grid(df.sparkSession, snap.grid, os.path.join(path, "grid"))
-    return snap.grid
+    (
+        _snapshot_frame(df, spec, grid)
+        .unionByName(grid_rows, allowMissingColumns=True)
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+    return grid
 
 
 def read_snapshot(spark: SparkSession, path: str) -> Snapshot:
-    return Snapshot(
-        columns=spark.read.parquet(os.path.join(path, "columns")),
-        bins=spark.read.parquet(os.path.join(path, "bins")),
-        categories=spark.read.parquet(os.path.join(path, "categories")),
-        grid=read_grid(spark, os.path.join(path, "grid")),
-    )
+    old = spark._jvm.org.apache.hadoop.fs.Path(path, "columns")
+    if old.getFileSystem(spark._jsc.hadoopConfiguration()).exists(old):
+        raise ValueError(
+            f"{path} holds a snapshot in the old three-directory layout "
+            "(columns/, bins/, categories/ and grid/); write_snapshot stores "
+            "a snapshot as one dataset — rewrite it with that"
+        )
+    frame = spark.read.schema(_SNAPSHOT_DDL).parquet(path)
+    is_grid = F.col("part") == "grid"
+    grid = {r.column: (r.lo, r.hi, r.n_bins) for r in frame.where(is_grid).collect()}
+    return Snapshot(frame.where(~is_grid), grid)
 
 
 def merge_snapshots(spark: SparkSession, paths: list[str]) -> Snapshot:
@@ -249,26 +270,26 @@ def merge_snapshots(spark: SparkSession, paths: list[str]) -> Snapshot:
             raise ValueError(
                 f"cannot merge snapshots with different bin grids: {grids[0]} vs {g}"
             )
-    cols = snaps[0].columns
-    bins = snaps[0].bins
-    cats = snaps[0].categories
+    frame = snaps[0].frame
     for s in snaps[1:]:
-        cols = cols.unionByName(s.columns)
-        bins = bins.unionByName(s.bins)
-        cats = cats.unionByName(s.categories)
-    merged_cols = cols.groupBy("column", "kind").agg(
+        frame = frame.unionByName(s.frame)
+    is_columns = F.col("part") == "columns"
+    # the sketch union is an object aggregate: keep it to the columns rows,
+    # one group per column, and sum the counts in a hash aggregate
+    # NB min_s/max_s are string-typed lexicographic after merge; numeric
+    # columns' true extremes live in the grid + bins.  Documented tradeoff:
+    # the per-slice values are exact, the merged extreme is indicative.
+    columns = frame.where(is_columns).groupBy("part", "column", "kind").agg(
         F.sum("n").alias("n"),
         F.sum("n_null").alias("n_null"),
         F.min("min_s").alias("min_s"),
         F.max("max_s").alias("max_s"),
         F.hll_union_agg(F.col("hll"), F.lit(True)).alias("hll"),
     )
-    # NB min_s/max_s are string-typed lexicographic after merge; numeric
-    # columns' true extremes live in the grid + bins.  Documented tradeoff:
-    # the per-slice values are exact, the merged extreme is indicative.
-    merged_bins = bins.groupBy("column", "bin").agg(F.sum("cnt").alias("cnt"))
-    merged_cats = cats.groupBy("column", "value").agg(F.sum("cnt").alias("cnt"))
-    return Snapshot(merged_cols, merged_bins, merged_cats, grids[0])
+    counts = frame.where(~is_columns).groupBy("part", "column", "bin", "value").agg(
+        F.sum("n").alias("n")
+    )
+    return Snapshot(columns.unionByName(counts, allowMissingColumns=True), grids[0])
 
 
 def distinct_estimates(snap: Snapshot) -> DataFrame:
@@ -287,34 +308,41 @@ def _binned_ecdf(counts: dict[int, int], n_bins: int) -> list[float]:
     return out
 
 
+def _collect_parts(frame: DataFrame) -> tuple[dict, dict, dict]:
+    """Columns rows by column (``n``, ``n_null``, ``distinct_est``), and bin /
+    category counts by column, from a long-form snapshot frame in one
+    action.  It comes back as Arrow: a snapshot has a row per category
+    value, and a ``Row`` per value costs the driver more than the scan."""
+    cols, bins, cats = {}, {}, {}
+    is_columns = F.col("part") == "columns"
+    table = frame.select(
+        "part", "column", "n", "n_null", "bin", "value",
+        F.when(is_columns, F.hll_sketch_estimate("hll")).alias("distinct_est"),
+    ).toArrow()
+    for part, c, n, n_null, b, value, est in zip(*table.to_pydict().values()):
+        if part == "columns":
+            cols[c] = SimpleNamespace(n=n, n_null=n_null, distinct_est=est)
+        elif part == "bins":
+            bins.setdefault(c, {})[b] = n
+        elif part == "categories":
+            cats.setdefault(c, {})[value] = n
+    return cols, bins, cats
+
+
 def drift_vs_snapshot(
     cur_df: DataFrame, base: Snapshot, spec: SnapshotSpec, alpha: float = 0.05
 ) -> list[dict]:
     """Drift report of ``cur_df`` against a baseline snapshot.
 
-    One snapshot pass over the current data (on the baseline's grid), then
+    One snapshot pass over the current data (on the baseline's grid) and
+    one read of the baseline snapshot, each collected in one action, then
     O(cols × bins) driver-side math — the baseline corpus is not rescanned.
     Returns one dict per tracked column with the KS or chi-square statistic,
     p-value, drifted flag, and null-rate / distinct-estimate deltas."""
-    cur = compute_snapshot(cur_df, spec, grid=base.grid)
-
-    base_cols = {r.column: r for r in distinct_estimates(base).join(
-        base.columns.drop("hll"), "column").collect()}
-    cur_cols = {r.column: r for r in distinct_estimates(cur).join(
-        cur.columns.drop("hll"), "column").collect()}
-
-    base_bins = {}
-    for r in base.bins.collect():
-        base_bins.setdefault(r.column, {})[r.bin] = r.cnt
-    cur_bins = {}
-    for r in cur.bins.collect():
-        cur_bins.setdefault(r.column, {})[r.bin] = r.cnt
-    base_cats = {}
-    for r in base.categories.collect():
-        base_cats.setdefault(r.column, {})[r.value] = r.cnt
-    cur_cats = {}
-    for r in cur.categories.collect():
-        cur_cats.setdefault(r.column, {})[r.value] = r.cnt
+    base_cols, base_bins, base_cats = _collect_parts(base.frame)
+    cur_cols, cur_bins, cur_cats = _collect_parts(
+        _snapshot_frame(cur_df, spec, base.grid)
+    )
 
     report = []
     for c in spec.numeric:

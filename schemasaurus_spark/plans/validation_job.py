@@ -68,15 +68,21 @@ class ValidationJob:
         majority at scale) never allocate a single error object.  Count
         parity with the array backend is test-asserted, so the guard is
         semantics-preserving.
+
+        ``valid`` is the guard's own condition, not ``size(errors) = 0``:
+        a filter on ``valid`` (``violations``) is pushed below the
+        projection, and there it would build an invalid row's error array
+        a second time.
         """
         if not guarded:
             return self.validator.apply(docs)
         row_type = docs.schema
         cnt = self.counter.row_errors(row_type)
         full = self.validator.row_errors(row_type)
+        has_errors = F.coalesce(cnt > 0, F.lit(False))
         return docs.withColumn(
-            "errors", F.when(cnt > 0, full).otherwise(_empty())
-        ).withColumn("valid", F.size(F.col("errors")) == 0)
+            "errors", F.when(has_errors, full).otherwise(_empty())
+        ).withColumn("valid", ~has_errors)
 
     def counted(self, docs: DataFrame) -> DataFrame:
         return self.counter.apply(docs)
@@ -84,8 +90,14 @@ class ValidationJob:
     def violations(self, validated: DataFrame, id_col: str = "doc_id") -> DataFrame:
         """One row per violation: (doc_id, span_idx, keyword, json_pointer,
         code, message, value, arg) — the north-rule output contract."""
-        ex = validated.where(~F.col("valid")).select(
-            F.col(id_col), F.posexplode("errors").alias("err_idx", "err")
+        # explode an expression, not the ``errors`` column: for a column the
+        # optimizer infers ``size(errors) > 0`` and pushes it below the
+        # validation projection, where it rebuilds every invalid row's
+        # error array just to test it
+        invalid = ~F.col("valid")
+        ex = validated.where(invalid).select(
+            F.col(id_col),
+            F.posexplode(F.when(invalid, F.col("errors"))).alias("err_idx", "err"),
         )
         # span_idx is NULL for violations not under /spans/<i> (root-level
         # required, or a custom flat schema) — an unconditional cast of the

@@ -14,14 +14,17 @@ idempotent at unit granularity.
 **Cost shape of a unit.**  One validation scan: the verdict counters
 (``n_docs``, ``n_invalid_docs``, ``n_violations``, ``n_partitions``) are an
 ``Observation`` on the validated frame, collected by the violations write
-itself, so no separate verdict scan runs.  The optional snapshot adds its
-own scans of the unit (``snapshot_prep`` is an arbitrary ``df -> df``, so
-its aggregates cannot ride the violations write), which is why a unit
-still reads its input more than once.  The validator is compiled once per
-row type and reused by every unit, the snapshot bin grid is loaded or
-frozen once per ``run``, and grid frames are JVM-local (no Python worker).
-The manifest's ``metrics`` also carry the unit's ``wall_s``; ``run``'s
-returned summary carries counts only.
+itself, so no separate verdict scan runs.  The optional snapshot is one
+more job over the unit, written as one dataset: it scans the unit twice
+side by side, once for the per-column stats and HLL sketches, once for
+the bin and category counts (``snapshot_prep`` is an arbitrary
+``df -> df``, so its aggregates cannot ride the violations write; see
+``operators/snapshot.py`` for why the two aggregates stay apart).  Unit
+files are read with the row type inferred once from the input listing,
+so no read starts a schema-inference job; the validator is compiled once
+per row type, and the snapshot bin grid is loaded or frozen once per
+``run``.  The manifest's ``metrics`` also carry the unit's ``wall_s``;
+``run``'s returned summary carries counts only.
 
 At 10^12 docs the driver loop is over O(thousands) of units while each
 unit fans out to the cluster — the loop is control plane only, no data
@@ -37,15 +40,23 @@ current listing) and by default refuses with ``LineageDriftError``;
 ``on_drift="reset"`` instead deletes the orphaned manifests *and* their
 violation dirs, then reruns whatever the new listing requires.
 
+**Every input file must have the same schema.**  Units read their files
+with the one row type taken from the listing, as a parquet read without
+``mergeSchema`` takes it from a single file's footer.  A file with a field
+the row type lacks has that field dropped, a field the file lacks reads
+as NULL, and a type the row type narrows fails the read, so validating an
+input whose schema evolved between files (or an Iceberg table after a
+schema change) needs one run per schema.
+
 **Per-unit stats snapshots** (optional ``snapshot_spec``): each unit also
 writes a mergeable stats snapshot (``operators/snapshot.py`` — HLL distinct
 sketches, fixed-grid histograms, category counts) under
 ``snapshots/unit=<id>/``.  The bin grid is frozen from the first unit and
-persisted (``snapshot_grid/``) so resumed runs and later units histogram
-onto identical edges.  ``merged_snapshot`` folds ONLY manifested units'
-snapshots into the corpus snapshot — an algebraic merge over
-metadata-sized frames, no rescan of data files — giving resumable,
-exactly-once corpus stats and a ready baseline for drift checks.
+persisted (``snapshot_grid.json``, written like a manifest) so resumed runs
+and later units histogram onto identical edges.  ``merged_snapshot`` folds
+ONLY manifested units' snapshots into the corpus snapshot — an algebraic
+merge over metadata-sized frames, no rescan of data files — giving
+resumable, exactly-once corpus stats and a ready baseline for drift checks.
 """
 
 from __future__ import annotations
@@ -58,6 +69,7 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from schemasaurus_spark.plans.validation_job import ValidationJob
 
@@ -98,8 +110,21 @@ def list_units(spark: SparkSession, input_path: str, files_per_unit: int = 4) ->
     NB: unit processing reads the listed data files directly, which is
     exact for parquet dirs and append-only Iceberg tables; merge-on-read
     Iceberg deletes would need snapshot-scoped planning instead."""
-    jvm_files = _read_input(spark, input_path).inputFiles()
-    files = sorted(jvm_files)
+    return _group_units(_read_input(spark, input_path).inputFiles(), files_per_unit)
+
+
+def _file_row_type(listing: DataFrame) -> StructType:
+    """The row type of the listed files read by name: the listing's schema
+    without its directory-partition columns (``k=v`` path segments), which a
+    read of the files themselves does not produce."""
+    plan = listing._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "LogicalRelation":  # a table, not a path
+        return listing.schema
+    return StructType.fromJson(json.loads(plan.relation().dataSchema().json()))
+
+
+def _group_units(files, files_per_unit: int) -> list[dict]:
+    files = sorted(files)
     units = []
     for i in range(0, len(files), files_per_unit):
         group = files[i : i + files_per_unit]
@@ -130,13 +155,17 @@ class RunState:
             "metrics": metrics,
             "completed_at": time.time(),
         }
-        final = os.path.join(self.dir, f"{unit['unit_id']}.json")
-        tmp = final + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, final)  # atomic on POSIX
+        _write_json(os.path.join(self.dir, f"{unit['unit_id']}.json"), manifest)
+
+
+def _write_json(final: str, obj) -> None:
+    """tmp + fsync + rename: readers see the old file or the whole new one."""
+    tmp = final + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.rename(tmp, final)  # atomic on POSIX
 
 
 class ResumableValidation:
@@ -173,7 +202,11 @@ class ResumableValidation:
         ``"reset"`` drops orphaned manifests + their violation dirs and
         revalidates what the new listing requires."""
         state = RunState(os.path.join(out_dir, "manifests"))
-        units = list_units(spark, input_path, self.files_per_unit)
+        # the listing's inferred row type reads every unit: no per-read
+        # schema-inference job, and one compiled validator per run
+        listing = _read_input(spark, input_path)
+        units = _group_units(listing.inputFiles(), self.files_per_unit)
+        row_type = _file_row_type(listing)
         done = state.completed()
         current_ids = {u["unit_id"] for u in units}
         orphans = sorted(uid for uid in done if uid not in current_ids)
@@ -213,8 +246,8 @@ class ResumableValidation:
             if fail_after_units is not None and processed >= fail_after_units:
                 raise RuntimeError(f"injected failure after {processed} units")
             if self.snapshot_spec is not None and grid is None:
-                grid = self._snapshot_grid(spark, unit, out_dir)
-            metrics = self._run_unit(spark, unit, out_dir, grid)
+                grid = self._snapshot_grid(spark, unit, out_dir, row_type)
+            metrics = self._run_unit(spark, unit, out_dir, row_type, grid)
             state.mark_done(unit, metrics)
             processed += 1
         all_done = state.completed()
@@ -233,28 +266,46 @@ class ResumableValidation:
             },
         }
 
-    def _snapshot_grid(self, spark: SparkSession, unit: dict, out_dir: str) -> dict:
+    def _snapshot_grid(
+        self, spark: SparkSession, unit: dict, out_dir: str, row_type: StructType
+    ) -> dict:
         """Load the frozen bin grid, or freeze it from ``unit`` (the first
         pending one); ``run`` calls this once.
 
         Freezing from the first unit (not the whole input) keeps grid setup
         O(one unit) at 10^12 docs; later values outside that range land in
-        ``width_bucket``'s edge buckets, counted rather than lost."""
-        from schemasaurus_spark.operators import snapshot as snap
+        ``width_bucket``'s edge buckets, counted rather than lost.  The grid
+        lives in ``snapshot_grid.json`` beside the manifests, written like
+        them; an ``out_dir`` from before that (a ``snapshot_grid/`` parquet
+        dataset) is refused rather than silently given a new grid."""
+        from schemasaurus_spark.operators.snapshot import _default_grid
 
-        grid_dir = os.path.join(out_dir, "snapshot_grid")
-        if os.path.isdir(grid_dir):
-            return snap.read_grid(spark, grid_dir)
-        docs = spark.read.parquet(*unit["files"])
-        grid = snap._default_grid(self.snapshot_prep(docs), self.snapshot_spec)
-        snap.write_grid(spark, grid, grid_dir)
+        if os.path.isdir(os.path.join(out_dir, "snapshot_grid")):
+            raise ValueError(
+                f"{out_dir} holds its snapshot bin grid in the old layout "
+                "(a snapshot_grid/ parquet dataset); this version keeps it in "
+                "snapshot_grid.json — resume into a fresh out_dir"
+            )
+        path = os.path.join(out_dir, "snapshot_grid.json")
+        if os.path.exists(path):
+            with open(path) as f:
+                # tuples, as frozen: merge_snapshots compares grids with !=
+                return {c: tuple(edges) for c, edges in json.load(f).items()}
+        docs = spark.read.schema(row_type).parquet(*unit["files"])
+        grid = _default_grid(self.snapshot_prep(docs), self.snapshot_spec)
+        _write_json(path, grid)
         return grid
 
     def _run_unit(
-        self, spark: SparkSession, unit: dict, out_dir: str, grid: dict | None
+        self,
+        spark: SparkSession,
+        unit: dict,
+        out_dir: str,
+        row_type: StructType,
+        grid: dict | None,
     ) -> dict:
         t0 = time.perf_counter()
-        docs = spark.read.parquet(*unit["files"])
+        docs = spark.read.schema(row_type).parquet(*unit["files"])
         # the verdict counters ride the violations write: observed on the
         # validated frame before its ~valid filter, so they cover every row.
         # n_partitions counts non-empty input partitions without a distinct

@@ -120,7 +120,7 @@ def write_text_file(spark: SparkSession, path: str, text: str) -> None:
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
-    """A small driver-side table (bin grid, empty part) as a JVM-local frame.
+    """A small driver-side table (a snapshot's grid rows) as a JVM-local frame.
 
     The rows cross to the JVM as one Arrow batch and plan as a
     ``LocalRelation``, so acting on the frame runs no Python worker;

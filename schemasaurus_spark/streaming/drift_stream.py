@@ -48,15 +48,7 @@ def make_drift_sink(base: Snapshot, spec: SnapshotSpec, out_dir: str, alpha: flo
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # drift_vs_snapshot fires one action per snapshot part (columns /
-        # bins / categories), and foreachBatch re-reads the batch's input
-        # files per action — persist so the micro-batch is scanned once,
-        # honoring the module's "one snapshot pass per batch" cost model
-        batch_df.persist()
-        try:
-            report = drift_vs_snapshot(batch_df, base, spec, alpha)
-        finally:
-            batch_df.unpersist()
+        report = drift_vs_snapshot(batch_df, base, spec, alpha)
         (
             spark.createDataFrame(
                 [tuple(r[k] for k in (

@@ -77,6 +77,36 @@ def test_verdicts_two_phase(spark, docs, schema):
     assert total_violations > 0
 
 
+def _filter_conditions(df):
+    """The conditions of every Filter in ``df``'s optimized plan."""
+    out, todo = [], [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "Filter":
+            out.append(node.condition().toString())
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return out
+
+
+def test_violations_filter_skips_error_records(spark, docs, schema, tmp_path):
+    """Over a parquet scan, the filter of ``violations(validated(df))`` is
+    pushed below the validation projection.  It must test the error count
+    only: an error-record struct there builds each invalid row's error array
+    once more.  The rows equal those of the unguarded error-array backend."""
+    p = str(tmp_path / "docs")
+    docs.write.parquet(p)
+    df = spark.read.parquet(p)
+    job = ValidationJob(schema)
+    v = job.violations(job.validated(df))
+    conds = _filter_conditions(v)
+    assert conds, "no Filter under violations()"
+    assert all("struct(" not in c for c in conds), [c[:200] for c in conds]
+    want = job.violations(job.validated(df, guarded=False))
+    assert sorted(map(repr, v.collect())) == sorted(map(repr, want.collect()))
+    assert v.count() > 0
+
+
 def test_count_mode_matches_error_arrays(spark, docs, schema):
     """The verdict fast path (count_only) must produce exactly
     size(errors) for every row of the generated corpus."""

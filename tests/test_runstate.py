@@ -246,3 +246,53 @@ def test_crash_between_unit_write_and_manifest(spark, docs_path, tmp_path, monke
     }
     assert merged.bins.agg(F.sum("cnt")).first()[0] == 4000
     assert merged.categories.agg(F.sum("cnt")).first()[0] == 4000
+
+
+def test_grid_json_round_trip_and_old_layout_refused(spark, docs_path, tmp_path):
+    """The frozen grid lives in snapshot_grid.json and loads back as the
+    tuples it was frozen as (merge_snapshots compares grids with !=); an
+    out_dir with the grid as a snapshot_grid/ dataset is refused on resume
+    instead of being given a second, re-frozen grid."""
+    import json
+
+    from schemasaurus_spark.operators.snapshot import SnapshotSpec
+    from schemasaurus_spark.runstate import merged_snapshot
+
+    spec = SnapshotSpec(numeric=("n_spans",), n_bins=16)
+    prep = lambda df: df.select(F.size("spans").alias("n_spans"))
+    rv = ResumableValidation(files_per_unit=4, snapshot_spec=spec, snapshot_prep=prep)
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        rv.run(spark, docs_path, out, fail_after_units=1)
+    assert not os.path.exists(os.path.join(out, "snapshot_grid"))
+    with open(os.path.join(out, "snapshot_grid.json")) as f:
+        frozen = json.load(f)
+    rv.run(spark, docs_path, out)
+    loaded = rv._snapshot_grid(spark, None, out, None)
+    assert all(type(v) is tuple for v in loaded.values())
+    assert loaded == merged_snapshot(spark, out).grid == {
+        c: tuple(v) for c, v in frozen.items()
+    }
+
+    old = str(tmp_path / "old")
+    os.makedirs(os.path.join(old, "snapshot_grid"))
+    with pytest.raises(ValueError, match=r"old layout \(a snapshot_grid/"):
+        rv.run(spark, docs_path, old)
+
+
+def test_partition_columns_stay_out_of_the_unit_row_type(spark, tmp_path):
+    """Units read their files by name, which yields no directory-partition
+    column, so the row type taken from the listing must not carry one."""
+    from schemasaurus_spark.runstate import _file_row_type
+
+    p = str(tmp_path / "docs")
+    docs = generate_documents(spark, 600, seed=5)
+    docs.withColumn("part", F.lit(1)).write.partitionBy("part").parquet(p)
+    assert spark.read.parquet(p).columns == ["doc_id", "spans", "part"]
+    assert _file_row_type(spark.read.parquet(p)).fieldNames() == ["doc_id", "spans"]
+
+    out = str(tmp_path / "out")
+    summary = ResumableValidation(files_per_unit=2).run(spark, p, out)
+    files = [f for u in list_units(spark, p, 2) for f in u["files"]]
+    want = _verdict_fold(spark, files)
+    assert summary["totals"] == {k: want[k] for k in summary["totals"]}

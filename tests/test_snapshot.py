@@ -13,6 +13,7 @@ The invariants that make the component trustworthy at scale:
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 
@@ -63,6 +64,15 @@ def test_snapshot_columns_exact(spark, events):
     assert sum(cats.values()) == 4000 and len(cats) == 5
 
 
+def _assert_one_dataset(spark, path, grid):
+    """The on-disk layout: one parquet dataset, no part directories, the
+    grid as rows of its own part."""
+    assert not [n for n in os.listdir(path) if os.path.isdir(os.path.join(path, n))]
+    rows = spark.read.parquet(path).collect()
+    assert {r.part for r in rows} <= {"columns", "bins", "categories", "grid"}
+    assert {r.column: (r.lo, r.hi, r.n_bins) for r in rows if r.part == "grid"} == grid
+
+
 def test_split_merge_equals_whole(spark, events, tmp_path):
     whole = compute_snapshot(events, SPEC)
     grid = whole.grid
@@ -71,6 +81,8 @@ def test_split_merge_equals_whole(spark, events, tmp_path):
     pa, pb = str(tmp_path / "a"), str(tmp_path / "b")
     write_snapshot(a, SPEC, pa, grid=grid)
     write_snapshot(b, SPEC, pb, grid=grid)
+    for p in (pa, pb):
+        _assert_one_dataset(spark, p, grid)
     merged = merge_snapshots(spark, [pa, pb])
 
     assert merged.grid == grid
@@ -100,6 +112,7 @@ def test_merge_refuses_mismatched_grids(spark, events, tmp_path):
 def test_roundtrip_write_read(spark, events, tmp_path):
     p = str(tmp_path / "base")
     grid = write_snapshot(events, SPEC, p)
+    _assert_one_dataset(spark, p, grid)
     snap = read_snapshot(spark, p)
     assert snap.grid == grid
     assert snap.columns.count() == 2
@@ -211,3 +224,97 @@ def test_spec_rejects_empty_and_overlapping_columns():
         SnapshotSpec()
     with pytest.raises(ValueError, match="both numeric and categorical"):
         SnapshotSpec(numeric=("value",), categorical=("value", "event_type"))
+
+
+def _input_records(spark, group: str, action) -> int:
+    """Records read from input sources by the jobs ``action`` starts, summed
+    over their stages from the status store."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    tracker = sc.statusTracker()
+    wanted = {
+        sid for j in tracker.getJobIdsForGroup(group) for sid in tracker.getJobInfo(j).stageIds
+    }
+    assert wanted, f"no jobs ran under {group}"
+    jvm = sc._jvm
+    stages = sc._jsc.sc().statusStore().stageList(
+        jvm.java.util.ArrayList(), False, False,
+        sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
+    )
+    return sum(
+        s.inputRecords()
+        for s in (stages.apply(i) for i in range(stages.size()))
+        if s.stageId() in wanted and s.status().toString() != "SKIPPED"
+    )
+
+
+def test_snapshot_pass_reads_input_twice(spark, events, tmp_path):
+    """Writing a snapshot and the current side of a drift check each read
+    the input's rows twice, in one action: once for the per-column stats,
+    once for the bin and category counts (three scans before)."""
+    src = str(tmp_path / "events")
+    events.write.parquet(src)
+    df = spark.read.parquet(src)
+    grid = compute_snapshot(events, SPEC).grid
+    n = _input_records(
+        spark, "snapshot-write", lambda: write_snapshot(df, SPEC, str(tmp_path / "s"), grid=grid)
+    )
+    assert n == 2 * 4000
+    # the baseline side alone, for the drift check's current side
+    base = compute_snapshot(events, SPEC)
+    n_base = _input_records(spark, "snapshot-base", lambda: base.frame.collect())
+    n = _input_records(spark, "snapshot-drift", lambda: drift_vs_snapshot(df, base, SPEC))
+    assert n - n_base == 2 * 4000
+
+
+def test_read_snapshot_refuses_old_layout(spark, events, tmp_path):
+    """A snapshot written as per-part directories is refused by name, not
+    read as an empty or mixed dataset."""
+    p = tmp_path / "old"
+    for part in ("columns", "bins", "categories", "grid"):
+        events.limit(1).write.parquet(str(p / part))
+    with pytest.raises(ValueError, match="old three-directory layout"):
+        read_snapshot(spark, str(p))
+
+
+def test_empty_input_keeps_columns_rows(spark, events):
+    """An empty slice still has one columns row per tracked column, as a
+    global aggregate gives it (n 0, the rest NULL), and no bins or
+    categories, so merging and drift see the column."""
+    grid = compute_snapshot(events, SPEC).grid
+    snap = compute_snapshot(events.where("id < 0"), SPEC, grid=grid)
+    cols = {r.column: r for r in snap.columns.collect()}
+    assert set(cols) == {"value", "event_type"}
+    assert all(r.n == 0 and r.n_null is None and r.min_s is None for r in cols.values())
+    assert snap.bins.count() == 0 and snap.categories.count() == 0
+
+
+def test_sketch_aggregate_stays_out_of_the_counts(spark):
+    """The HLL sketch is an object aggregate, which Spark sorts once a task
+    holds more than 128 groups.  The snapshot keeps it global (no grouping
+    keys) and counts bins and categories in a hash aggregate, so a 256-bin
+    grid or a many-valued category never reaches that fallback."""
+    import re
+
+    from schemasaurus_spark.operators.snapshot import _snapshot_frame
+
+    nums = [f"x{i}" for i in range(6)]
+    cats = [f"c{i}" for i in range(4)]
+    df = spark.range(10).select(
+        *[(F.col("id") * i).cast("double").alias(c) for i, c in enumerate(nums)],
+        *[F.col("id").cast("string").alias(c) for c in cats],
+    )
+    spec = SnapshotSpec(numeric=tuple(nums), categorical=tuple(cats))
+    grid = {c: (0.0, 50.0, 256) for c in nums}
+    plan = _snapshot_frame(df, spec, grid)._jdf.queryExecution().executedPlan().toString()
+    assert re.findall(r"ObjectHashAggregate\(keys=\[([^\]]*)\]", plan) == ["", ""]
+    counts = re.findall(r"(?<!Object)HashAggregate\(keys=\[([^\]]*)\], functions=\[([^\]]*)\]", plan)
+    assert len(counts) == 2
+    for keys, functions in counts:
+        assert re.sub(r"#\d+", "", keys) == "part, column, bin, value"
+        assert functions in ("partial_count(1)", "count(1)")
