@@ -6533,7 +6533,7 @@ def doc_fused_quality_continuous(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-free, so the distinct-value table is EXACTLY corpus-sized and the
     old partition-less window would serialize the whole corpus through
     one task.  With operators/prefix.py the cumsum hash-distributes; the
-    ladder entry (tools/scale_ladder.py) pins the linear wall.  The
+    ladder entry (tools/pairs.py QUERIES) pins the linear wall.  The
     jitter is the standard tie-breaking trick of rank fusion and the
     worst case for the prefix machinery by construction.  All division /
     addition is single-expression IEEE double, identical in DuckDB."""

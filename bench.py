@@ -5,8 +5,9 @@
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 The span-validation pass additionally reports docs/sec (the BASELINE.json
-headline metric); scaling evidence across two parallelism levels lives in
-tools/scaling_bench.py -> BENCH/BASELINE.md.
+headline metric); scaling across two parallelism levels, two checkouts or
+corpus sizes is measured with interleaved fresh-JVM pairs by
+tools/pairs.py.
 
 Each query is forced with the noop sink (full computation, no driver
 collect) so timings measure the distributed plan, not result transfer.
@@ -20,8 +21,10 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
 
 import __spark_entry__ as entry
+from pairs import build_corpus, force
 from schemasaurus_spark.operators.referential import dangling_media_refs
 from schemasaurus_spark.operators.uniqueness import duplicate_keys
 from schemasaurus_spark.plans.validation_job import ValidationJob
@@ -30,11 +33,6 @@ from schemasaurus_spark.sources.generator import (
     generate_documents,
     generate_media_catalog,
 )
-
-
-def force(df) -> int:
-    df.write.format("noop").mode("overwrite").save()
-    return 0
 
 
 def main():
@@ -117,16 +115,12 @@ def main():
         run(name, lambda n=name: force(qs[n](spark, sf_dir)))
 
     # -- scale ladder rung: the two heaviest operators at 2x the corpus -----
-    # (verdict r3 #9: the bench record should carry a measured scaling STEP,
-    # not one spot value).  The 2x corpus is the sf table plus one
-    # substitution-ciphered copy (tools/scale_ladder.py build_corpus:
-    # bijective per-copy alphabet keeps the true answer and ideal work
-    # exactly linear in the factor) — a step ratio well above ~2 on these
-    # entries indicts the plan.  The full 1x/2x/4x curve lives in
-    # BENCH/BASELINE.md via tools/scale_ladder.py.
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
-    from scale_ladder import build_corpus
-
+    # (the bench record carries a measured scaling STEP, not one spot
+    # value).  The 2x corpus is the sf table plus one substitution-ciphered
+    # copy (tools/pairs.py build_corpus: a bijective per-copy alphabet keeps
+    # the true answer and ideal work exactly linear in the factor) — a step
+    # ratio well above ~2 on these entries indicts the plan.  The full
+    # curve comes from `python tools/pairs.py factor 1 2 4 --sf-dir ...`.
     x2_dir = build_corpus(spark, sf_dir, 2, tmp)
     for name in ["doc_training_corpus", "doc_ngram_jaccard_dups"]:
         run(f"{name}_x2", lambda n=name: force(qs[n](spark, x2_dir)))

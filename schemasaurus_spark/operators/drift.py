@@ -106,10 +106,16 @@ def chi_square_pvalue(stat: float, dof: int) -> float:
     return _gammainc_upper_reg(dof / 2.0, stat / 2.0)
 
 
+def _null_first(cell) -> tuple:
+    """Sort key for count-map cells that may hold a NULL (``None``) cell."""
+    return (cell is not None, cell)
+
+
 def chi_square_from_counts(base: dict[str, int], cur: dict[str, int]) -> tuple[float, int]:
     """Pearson chi-square homogeneity statistic between two category-count
-    maps (2 x K contingency table).  Returns (statistic, dof)."""
-    cats = sorted(set(base) | set(cur))
+    maps (2 x K contingency table).  Returns (statistic, dof).  A NULL
+    category (``None`` key) is a category of its own, sorted first."""
+    cats = sorted(set(base) | set(cur), key=_null_first)
     n1 = sum(base.values())
     n2 = sum(cur.values())
     total = n1 + n2
@@ -145,7 +151,7 @@ def psi_from_counts(base: dict, cur: dict, cells: list | None = None) -> float:
     explicitly when absent bins must contribute (they do whenever the two
     sides' totals differ).  Rule of thumb: <0.1 stable, 0.1-0.25 moderate
     shift, >0.25 major shift."""
-    cs = list(cells) if cells is not None else sorted(set(base) | set(cur))
+    cs = list(cells) if cells is not None else sorted(set(base) | set(cur), key=_null_first)
     k = len(cs)
     if k == 0:
         return 0.0

@@ -87,6 +87,8 @@ def fuse_rank_scores(
     bad = {c: w for c, w in weights.items() if int(w) <= 0}
     if bad:
         raise ValueError(f"fuse_rank_scores: weights must be positive ints: {bad}")
+    if id_col in weights:
+        raise ValueError(f"fuse_rank_scores: id_col {id_col!r} cannot also be a signal")
     # every signal's rank table derives from the SAME thin base projection
     # — never from the progressively-joined frame (round-5 review: that
     # chaining made signal k's eager bounds pass re-run all k-1 prior

@@ -29,7 +29,7 @@ def get_spark(
         f"-XX:ConcGCThreads={max(2, cpus // 4)}"
     )
     # SPARK_GRAFT_MASTER overrides the default in-process master — used by
-    # tools/scaling_cluster.py to run the same jobs under
+    # the executors axis of tools/pairs.py to run the same jobs under
     # local-cluster[N,cores,mem] (real separate executor JVMs, serialized
     # shuffle) via spark-submit without this builder stomping the master
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")

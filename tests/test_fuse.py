@@ -51,6 +51,14 @@ def test_weight_validation(spark):
         fuse_rank_scores(df, {"a": 0})
 
 
+def test_id_col_is_not_a_signal(spark):
+    """The id column named as a signal is refused up front, not left to
+    fail later as an ambiguous reference to the twice-selected column."""
+    df = spark.createDataFrame([(1, 7)], "doc_id long, a long")
+    with pytest.raises(ValueError, match="id_col 'doc_id'"):
+        fuse_rank_scores(df, {"doc_id": 1, "a": 1})
+
+
 def test_partition_invariance(spark):
     rows = [(i, i % 7, (i * 13) % 5 if i % 4 else None) for i in range(60)]
     df = spark.createDataFrame(rows, "doc_id long, a long, b long")

@@ -83,6 +83,39 @@ def test_no_partitionless_window_on_continuous_signal(spark):
     df.unpersist()
 
 
+def test_plan_lint_names_unused_window_allowance():
+    """An allowlisted query whose plan shows no partition-less window is
+    flagged by name; queries left out of a filtered run are not."""
+    import sys, os
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from tools.plan_lint import _GLOBAL_WINDOW_ALLOW, unused_allowances
+
+    report = {name: {"global_windows": 1} for name in _GLOBAL_WINDOW_ALLOW}
+    assert unused_allowances(report, set()) == []
+    report["event_user_skew"] = {"global_windows": 0}
+    del report["doc_token_topk"]
+    assert unused_allowances(report, set()) == ["doc_token_topk", "event_user_skew"]
+    assert unused_allowances(report, {"event_session_paths"}) == []
+
+
+def test_every_window_allowance_is_used(spark):
+    """Each _GLOBAL_WINDOW_ALLOW entry's own plan carries at least one
+    partition-less window, so the allowlist and the plan-string parser are
+    both still live."""
+    import sys, os
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as entry
+    from test_operators import SF_DIR
+    from tools.plan_lint import _GLOBAL_WINDOW_ALLOW, _global_window_count
+
+    qs = entry.queries()
+    for name, allowed in _GLOBAL_WINDOW_ALLOW.items():
+        spark.catalog.clearCache()
+        plan = qs[name](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+        assert 1 <= _global_window_count(plan) <= allowed, (name, plan)
+    spark.catalog.clearCache()
+
+
 def test_fuse_still_exact_on_continuous_doubles(spark):
     """End-to-end: midrank bp on a continuous signal matches the
     closed-form midrank computed driver-side."""

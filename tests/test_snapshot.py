@@ -318,3 +318,25 @@ def test_sketch_aggregate_stays_out_of_the_counts(spark):
     for keys, functions in counts:
         assert re.sub(r"#\d+", "", keys) == "part, column, bin, value"
         assert functions in ("partial_count(1)", "count(1)")
+
+
+def test_drift_with_null_category(spark, events, tmp_path):
+    """A NULL in a categorical column is a category of its own: drift sorts
+    it first instead of comparing None with strings, and a NULL share that
+    jumps from 20% to 60% is drift."""
+    def with_nulls(df, share):
+        return df.select(
+            "id",
+            "value",
+            F.when(F.col("id") % 10 < share, F.lit(None))
+            .otherwise(F.col("event_type"))
+            .alias("event_type"),
+        )
+
+    p = str(tmp_path / "base")
+    write_snapshot(with_nulls(events, 2), SPEC, p)
+    base = read_snapshot(spark, p)
+    quiet = {r["column"]: r for r in drift_vs_snapshot(with_nulls(events, 2), base, SPEC)}
+    assert quiet["event_type"]["statistic"] == 0.0 and not quiet["event_type"]["drifted"]
+    loud = {r["column"]: r for r in drift_vs_snapshot(with_nulls(events, 6), base, SPEC)}
+    assert loud["event_type"]["drifted"] and loud["event_type"]["test"] == "chi_square"

@@ -13,6 +13,11 @@
                                    single-task global sort; only legal
                                    over provably metadata/k-sized frames,
                                    enforced via _GLOBAL_WINDOW_ALLOW)
+* ``UNUSED_ALLOWANCE``            (an _GLOBAL_WINDOW_ALLOW entry whose own
+                                   plan shows no partition-less window: the
+                                   allowance is stale, or the plan-string
+                                   format changed under _global_window_count
+                                   and the check has gone blind)
 
 The lint inspects ``executedPlan`` BEFORE any action where possible
 (iterative operators that materialize during plan construction — CC,
@@ -20,7 +25,7 @@ IVF — still run their build jobs; sf0.001 keeps that cheap).
 
 Usage:  python tools/plan_lint.py [sf_dir] [query ...]
 Output: per-query lines + one summary JSON line; exit 1 if any query
-        plans a CartesianProduct or BatchEvalPython.
+        is flagged.
 """
 
 from __future__ import annotations
@@ -100,6 +105,16 @@ def _global_window_count(plan: str) -> int:
     return n
 
 
+def unused_allowances(report: dict, only: set) -> list:
+    """_GLOBAL_WINDOW_ALLOW entries linted in this run (all of them when
+    ``only`` is empty) whose plan shows no partition-less window."""
+    return [
+        name
+        for name in _GLOBAL_WINDOW_ALLOW
+        if (not only or name in only) and report.get(name, {}).get("global_windows", 0) < 1
+    ]
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
@@ -156,6 +171,9 @@ def main() -> None:
             + (f" arrow_py={row['arrow_python']}" if row["arrow_python"] else "")
             + ("  <-- " + ",".join(flags) if flags else "")
         )
+    for name in unused_allowances(report, only):
+        print(f"UNUSED_ALLOWANCE {name}: no partition-less window in its plan")
+        bad.append(name)
     ok = [n for n in report if n not in bad]
     print(
         json.dumps(
