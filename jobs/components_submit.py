@@ -51,12 +51,6 @@ def build_session() -> SparkSession:
     )
 
 
-def _write_text(spark: SparkSession, path: str, text: str) -> None:
-    from schemasaurus_spark.sources.io import write_text_file
-
-    write_text_file(spark, path, text)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pairs", required=True, help="parquet dir of (id_a, id_b) pairs")
@@ -83,6 +77,7 @@ def main() -> None:
         incremental_component_delta,
         incremental_components,
     )
+    from schemasaurus_spark.sources.io import write_text_file
 
     spark = build_session()
     report: dict = {"config": dict(vars(args)), "mode": "ingest" if args.assignment else "bootstrap"}
@@ -126,7 +121,7 @@ def main() -> None:
             ).collect()[0]
             report["n_ids"] = int(row["n_ids"])
             report["n_components"] = int(row["n_components"])
-        _write_text(
+        write_text_file(
             spark, os.path.join(args.output, "report.json"), json.dumps(report, indent=2)
         )
         print(json.dumps({k: v for k, v in report.items() if k != "config"}))

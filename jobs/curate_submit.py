@@ -52,12 +52,6 @@ def build_session() -> SparkSession:
     )
 
 
-def _write_text(spark: SparkSession, path: str, text: str) -> None:
-    from schemasaurus_spark.sources.io import write_text_file
-
-    write_text_file(spark, path, text)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
@@ -151,6 +145,7 @@ def main() -> None:
         quota_n = int(n_str)
 
     from schemasaurus_spark.plans.pipeline import CorpusPipeline
+    from schemasaurus_spark.sources.io import write_text_file
 
     with open(args.schema) as f:
         schema = json.load(f)
@@ -216,7 +211,7 @@ def main() -> None:
         "overwrite"
     ).parquet(os.path.join(args.output, "corpus"))
     report["corpus_rows"] = int(obs.get["n"])
-    _write_text(
+    write_text_file(
         spark,
         os.path.join(args.output, "report.json"),
         json.dumps(report, indent=2),

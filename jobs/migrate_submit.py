@@ -48,12 +48,6 @@ def build_session() -> SparkSession:
     )
 
 
-def _write_text(spark: SparkSession, path: str, text: str) -> None:
-    from schemasaurus_spark.sources.io import write_text_file
-
-    write_text_file(spark, path, text)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
@@ -75,6 +69,7 @@ def main() -> None:
         breaking_violations,
         migration_matrix,
     )
+    from schemasaurus_spark.sources.io import write_text_file
 
     with open(args.schema_old) as f:
         old_schema = json.load(f)
@@ -125,7 +120,7 @@ def main() -> None:
                 if args.static_only
                 else "statically backward-compatible (all deltas widen)"
             )
-        _write_text(
+        write_text_file(
             spark, os.path.join(args.output, "report.json"), json.dumps(report, indent=2)
         )
         print(json.dumps(report["static"] | {"breaking_docs": int(n_breaking)}))

@@ -50,6 +50,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.functions import broadcast
 
 from schemasaurus_spark.operators.dedup import _pin
@@ -82,7 +83,13 @@ def exclusive_prefix(
     is pinned (dedup._pin: MEMORY_AND_DISK, released by an enclosing
     ``pin_scope`` or LRU — the LSH family's idiom), so the bounds job
     MATERIALIZES the cache and the main job reads it instead of
-    recomputing the lineage."""
+    recomputing the lineage.
+
+    Only numeric, date and timestamp order columns get percentile bounds
+    (``percentile_approx`` casts anything else to double and fails).  Any
+    other order column, a string for one, runs as ONE bucket: the cumsum
+    stage is then a single task over the whole table, the cost this module
+    exists to avoid, so keep such tables metadata-sized."""
     if n_buckets is None:
         par = per.sparkSession.sparkContext.defaultParallelism
         n_buckets = max(64, min(1024, 2 * par))
@@ -93,7 +100,8 @@ def exclusive_prefix(
     # pin first so this job builds the cache the main plan reuses
     per = _pin(per)
     bounds: list = []
-    if n_buckets > 1:
+    rangeable = (T.NumericType, T.DateType, T.TimestampType)
+    if n_buckets > 1 and isinstance(per.schema[order_col].dataType, rangeable):
         fracs = [i / n_buckets for i in range(1, n_buckets)]
         row = per.agg(
             F.percentile_approx(F.col(order_col), F.lit(fracs), F.lit(10000))

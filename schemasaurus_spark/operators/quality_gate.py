@@ -30,12 +30,21 @@ through.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_OPS = ("le", "ge", "lt", "gt", "eq", "between")
+#: comparison per op; Python operators, so one table serves Columns and floats
+_COMPARE = {
+    "le": operator.le,
+    "ge": operator.ge,
+    "lt": operator.lt,
+    "gt": operator.gt,
+    "eq": operator.eq,
+    "between": lambda v, lo, hi: (v >= lo) & (v <= hi),  # inclusive
+}
 
 #: metrics that do not take a column
 _TABLE_METRICS = ("row_count",)
@@ -81,7 +90,7 @@ class QualityRule:
     threshold_hi: float | None = None
 
     def __post_init__(self) -> None:
-        if self.op not in _OPS:
+        if self.op not in _COMPARE:
             raise ValueError(f"rule {self.rule_id!r}: unknown op {self.op!r}")
         if self.op == "between" and self.threshold_hi is None:
             raise ValueError(f"rule {self.rule_id!r}: between needs threshold_hi")
@@ -155,22 +164,26 @@ def _metric_expr(metric: str, column: str | None, rsd: float) -> Column:
     raise AssertionError(metric)
 
 
+def _holds(value, rule: QualityRule):
+    """``value op threshold`` for a Column or a float.  The caller fails a
+    NULL / None value closed."""
+    bounds = [float(rule.threshold)]
+    if rule.op == "between":
+        bounds.append(float(rule.threshold_hi))
+    return _COMPARE[rule.op](value, *bounds)
+
+
 def _passed(value: Column, rule: QualityRule) -> Column:
-    t = F.lit(float(rule.threshold))
-    if rule.op == "le":
-        ok = value <= t
-    elif rule.op == "ge":
-        ok = value >= t
-    elif rule.op == "lt":
-        ok = value < t
-    elif rule.op == "gt":
-        ok = value > t
-    elif rule.op == "eq":
-        ok = value == t
-    else:  # between
-        ok = (value >= t) & (value <= F.lit(float(rule.threshold_hi)))
     # fail closed: NULL metric (empty input / all-NULL column) fails the gate
-    return F.coalesce(ok, F.lit(False))
+    return F.coalesce(_holds(value, rule), F.lit(False))
+
+
+def _check_suite(gate: str, rules: list[QualityRule]) -> None:
+    if not rules:
+        raise ValueError(f"{gate}: empty rule suite")
+    ids = [r.rule_id for r in rules]
+    if len(set(ids)) != len(ids):
+        raise ValueError(f"{gate}: duplicate rule_ids in {ids}")
 
 
 def quality_gate(
@@ -183,11 +196,7 @@ def quality_gate(
     with ``value`` the measured metric as double and ``passed`` the gate
     verdict (NULL value fails closed).
     """
-    if not rules:
-        raise ValueError("quality_gate: empty rule suite")
-    ids = [r.rule_id for r in rules]
-    if len(set(ids)) != len(ids):
-        raise ValueError(f"quality_gate: duplicate rule_ids in {ids}")
+    _check_suite("quality_gate", rules)
 
     drifty = [r.rule_id for r in rules if r.metric in _DRIFT_METRICS]
     if drifty:
@@ -245,11 +254,7 @@ def snapshot_gate(spark, snap, rules: list[QualityRule]) -> DataFrame:
     column), so the single collect here is O(tracked columns), not data.
     Output schema matches ``quality_gate`` exactly.
     """
-    if not rules:
-        raise ValueError("snapshot_gate: empty rule suite")
-    ids = [r.rule_id for r in rules]
-    if len(set(ids)) != len(ids):
-        raise ValueError(f"snapshot_gate: duplicate rule_ids in {ids}")
+    _check_suite("snapshot_gate", rules)
     unsupported = [r.rule_id for r in rules if r.metric not in _SNAPSHOT_METRICS]
     if unsupported:
         raise ValueError(
@@ -301,19 +306,7 @@ def snapshot_gate(spark, snap, rules: list[QualityRule]) -> DataFrame:
         return None if raw is None else float(raw)
 
     def passed(v, r: QualityRule) -> bool:
-        if v is None:
-            return False  # fail closed, as in the scan path
-        if r.op == "le":
-            return v <= r.threshold
-        if r.op == "ge":
-            return v >= r.threshold
-        if r.op == "lt":
-            return v < r.threshold
-        if r.op == "gt":
-            return v > r.threshold
-        if r.op == "eq":
-            return v == r.threshold
-        return r.threshold <= v <= r.threshold_hi
+        return v is not None and _holds(v, r)  # fail closed, as in the scan path
 
     rows = [
         (
@@ -361,11 +354,7 @@ def drift_gate(report: list[dict], rules: list[QualityRule]) -> list[dict]:
     column FAILS CLOSED with value None (a drift gate must not pass
     because monitoring silently stopped covering a column).
     """
-    if not rules:
-        raise ValueError("drift_gate: empty rule suite")
-    ids = [r.rule_id for r in rules]
-    if len(set(ids)) != len(ids):
-        raise ValueError(f"drift_gate: duplicate rule_ids in {ids}")
+    _check_suite("drift_gate", rules)
     bad = [r.rule_id for r in rules if r.metric not in _DRIFT_METRICS]
     if bad:
         raise ValueError(
@@ -391,20 +380,7 @@ def drift_gate(report: list[dict], rules: list[QualityRule]) -> list[dict]:
             )
         else:
             value = float(row[r.metric])
-        if value is None:
-            ok = False  # fail closed
-        elif r.op == "le":
-            ok = value <= r.threshold
-        elif r.op == "ge":
-            ok = value >= r.threshold
-        elif r.op == "lt":
-            ok = value < r.threshold
-        elif r.op == "gt":
-            ok = value > r.threshold
-        elif r.op == "eq":
-            ok = value == r.threshold
-        else:
-            ok = r.threshold <= value <= r.threshold_hi
+        ok = value is not None and _holds(value, r)  # fail closed
         out.append(
             {
                 "rule_id": r.rule_id,

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from schemasaurus_spark.schema.columns import ColumnValidator, _empty
+from schemasaurus_spark.schema.columns import ColumnValidator
 
 # flagship document schema (FIXTURES.md §4) — mirrors the reference keyword
 # coverage over the north-rule table shape
@@ -81,7 +81,7 @@ class ValidationJob:
         full = self.validator.row_errors(row_type)
         has_errors = F.coalesce(cnt > 0, F.lit(False))
         return docs.withColumn(
-            "errors", F.when(has_errors, full).otherwise(_empty())
+            "errors", self.validator._gate(has_errors, full)
         ).withColumn("valid", ~has_errors)
 
     def counted(self, docs: DataFrame) -> DataFrame:

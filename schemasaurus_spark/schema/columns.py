@@ -18,8 +18,8 @@ typed-backend deviations documented in SURVEY.md §7:
   both key off ``isNull``), and ``type: "null"`` accepts null;
 * min/maxProperties count non-null struct fields (a struct always "has"
   every field);
-* per-node custom message tables apply per node without the reference's
-  one-shot ``$cm`` deletion quirk.
+* a node's ``messages`` table applies to every code the node emits,
+  without the reference's one-shot ``$cm`` deletion quirk.
 
 Violation ordering parity: fragments are concatenated in the reference's
 selector firing order (v4validator.js prototype key order), then children
@@ -28,6 +28,7 @@ in schema declaration order — the same walk order the Python oracle uses.
 
 from __future__ import annotations
 
+import re
 from typing import Any, Callable
 
 from pyspark.sql import Column
@@ -49,18 +50,10 @@ ERROR_TYPE = T.StructType(
     ]
 )
 ERRORS_TYPE = T.ArrayType(ERROR_TYPE)
-_ERRORS_DDL = "array<struct<code:string,message:string,value:string,arg:string,path:string>>"
 
 
 def _empty() -> Column:
-    return F.array().cast(_ERRORS_DDL)
-
-
-_NUMERIC = (
-    T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-    T.FloatType, T.DoubleType, T.DecimalType,
-)
-_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    return F.array().cast(ERRORS_TYPE.simpleString())
 
 
 class UndefinedType(T.DataType):
@@ -86,6 +79,29 @@ def stringify(value: Column, dtype) -> Column:
 class SchemaUnsupportedError(Exception):
     """Raised when a keyword cannot compile to native Columns for this typed
     schema — callers route such schemas to the Arrow-batch walker backend."""
+
+
+def ref_step(compiler, schema, at_limit: Callable, body: Callable):
+    """One depth-bounded schema step of a Column compiler (``compiler`` has
+    ``_depth``, ``max_ref_depth``, ``options`` and ``schema_root``): follow
+    ``$ref`` and return ``body(resolved_schema)``.  A node entered
+    ``max_ref_depth`` times on the current compile path returns
+    ``at_limit()`` instead — the bounded unroll of a recursive ``$ref``
+    (SURVEY §7.7)."""
+    sid = id(schema)
+    depth = compiler._depth.get(sid, 0)
+    if depth >= compiler.max_ref_depth:
+        return at_limit()
+    compiler._depth[sid] = depth + 1
+    try:
+        if isinstance(schema, dict) and "$ref" in schema:
+            resolved = resolve_ref(
+                compiler.options.get("loader"), compiler.schema_root, schema["$ref"]
+            )
+            return ref_step(compiler, resolved, at_limit, body)
+        return body(schema)
+    finally:
+        compiler._depth[sid] = depth
 
 
 class ColumnValidator:
@@ -157,7 +173,9 @@ class ColumnValidator:
     # ------------------------------------------------------- error building
 
     # fragment algebra: array mode concatenates error-struct arrays; count
-    # mode adds integer counts.  All keyword logic is shared.
+    # mode adds integer counts.  These helpers are where the two modes
+    # differ; keyword logic is shared (the exceptions are the three
+    # per-element keywords, whose count is a size formula, not a fold).
 
     def _frag_empty(self) -> Column:
         return F.lit(0) if self.count_only else _empty()
@@ -181,8 +199,21 @@ class ColumnValidator:
     def _is_ok(self, frag: Column) -> Column:
         return (frag == 0) if self.count_only else (F.size(frag) == 0)
 
+    def _gate(self, cond: Column, frag: Column) -> Column:
+        """*frag* where *cond* holds, else the empty fragment."""
+        return F.when(cond, frag).otherwise(self._frag_empty())
+
+    def _fold(self, frags: Column) -> Column:
+        """One fragment from an array of per-element fragments."""
+        if self.count_only:
+            return F.aggregate(frags, F.lit(0), lambda acc, x: acc + x)
+        return F.flatten(frags)
+
     def _err(self, code: str, node_schema: dict, value: Column, dtype,
              path: Column, arg: Any = None) -> Column:
+        """Every violation record (code, message, value, arg, path) is made
+        here.  A node's ``messages`` entry for *code* wins over the
+        validator's message table."""
         if self.count_only:  # never embedded; skip all struct/stringify work
             return F.lit(1)
         msgs = node_schema.get("messages")
@@ -191,7 +222,10 @@ class ColumnValidator:
         else:
             msg = self.messages.get(code)
             if msg is None:
-                msg = arg if isinstance(arg, str) else js_stringify(arg) if arg is not None else code
+                msg = (
+                    arg if isinstance(arg, (str, Column))
+                    else js_stringify(arg) if arg is not None else code
+                )
         if arg is None:
             arg_s = F.lit(None).cast("string")
         elif isinstance(arg, Column):
@@ -208,31 +242,26 @@ class ColumnValidator:
 
     def _one(self, cond: Column, err: Column) -> Column:
         """Single conditional error -> one-or-zero fragment."""
-        if self.count_only:
-            return F.when(cond, F.lit(1)).otherwise(F.lit(0))
-        return F.when(cond, F.array(err)).otherwise(_empty())
+        return self._gate(cond, self._single(err))
+
+    @staticmethod
+    def _err_if(cond: Column, err: Column) -> Column:
+        """One element of a per-element record array: *err* or NULL (the
+        caller filters the NULLs out)."""
+        none = F.lit(None).cast(ERROR_TYPE.simpleString())
+        return F.when(cond, err).otherwise(none)
 
     # ------------------------------------------------------------- the walk
 
     def _node(self, schema: dict, dtype, value: Column, path: Column,
-              is_root: bool = False, elig: Column | None = None) -> Column:
+              is_root: bool = False) -> Column:
         """Compile one schema node.  Mirrors compiler.js step/stepProcess."""
-        sid = id(schema)
-        depth = self._depth.get(sid, 0)
-        if depth >= self.max_ref_depth:
-            return self._frag_empty()  # depth-bounded unroll of recursive $ref (SURVEY §7.7)
-        self._depth[sid] = depth + 1
-        try:
-            if isinstance(schema, dict) and "$ref" in schema:
-                resolved = resolve_ref(
-                    self.options.get("loader"), self.schema_root, schema["$ref"]
-                )
-                return self._node(resolved, dtype, value, path, is_root, elig)
-            return self._node_body(schema, dtype, value, path, is_root, elig)
-        finally:
-            self._depth[sid] = depth
+        return ref_step(
+            self, schema, self._frag_empty,
+            lambda s: self._node_body(s, dtype, value, path, is_root),
+        )
 
-    def _node_body(self, schema, dtype, value, path, is_root, elig) -> Column:
+    def _node_body(self, schema, dtype, value, path, is_root) -> Column:
         frags: list[Column] = []
         undef = _is_undef(dtype)
         present = F.lit(False) if undef else value.isNotNull()
@@ -329,7 +358,7 @@ class ColumnValidator:
                     frags.append(self._one(present & (cnt < n), e("minProperties", n)))
 
         # -- numbers ----------------------------------------------------------
-        num = value.cast("double") if isinstance(dtype, _NUMERIC) else None
+        num = value.cast("double") if isinstance(dtype, T.NumericType) else None
         if "multipleOf" in schema and num is not None:
             k = schema["multipleOf"]
             cond = present & ((num / F.lit(k)) % 1 != 0) if k != 0 else present
@@ -358,21 +387,20 @@ class ColumnValidator:
 
         # -- children: items / properties (walk order: items first, like
         #    processor.js processors = [processItems, processProperties]) ----
-        child = self._children_items(schema, dtype, value, path)
-        if child is not None:
-            frags.append(child)
-        child = self._children_properties(schema, dtype, value, path)
-        if child is not None:
-            frags.append(child)
+        prev = (self.parent_value, self.parent_dtype)
+        self.parent_value, self.parent_dtype = value, dtype
+        try:
+            for children in (self._children_items, self._children_properties):
+                child = children(schema, dtype, value, path)
+                if child is not None:
+                    frags.append(child)
+        finally:
+            self.parent_value, self.parent_dtype = prev
 
         if not frags:
             return self._frag_empty()
         out = self._cat(frags)
-        if skip_on_missing:
-            out = F.when(value.isNotNull(), out).otherwise(self._frag_empty())
-        if elig is not None:
-            out = F.when(elig, out).otherwise(self._frag_empty())
-        return out
+        return self._gate(value.isNotNull(), out) if skip_on_missing else out
 
     # ------------------------------------------------------------- keywords
 
@@ -389,11 +417,11 @@ class ColumnValidator:
         if t == "string":
             return absent if isinstance(dtype, T.StringType) else F.lit(True)
         if t == "number":
-            return absent if isinstance(dtype, _NUMERIC) else F.lit(True)
+            return absent if isinstance(dtype, T.NumericType) else F.lit(True)
         if t == "integer":
-            if isinstance(dtype, _INTEGRAL):
+            if isinstance(dtype, T.IntegralType):
                 return absent
-            if isinstance(dtype, _NUMERIC):
+            if isinstance(dtype, T.NumericType):
                 return absent | (value.cast("double") % 1 != 0)
             return F.lit(True)
         if t == "boolean":
@@ -439,26 +467,17 @@ class ColumnValidator:
         # element i errors iff an equal element exists among the first i
         if self.count_only:
             # occurrences beyond the first of each value == len - len(distinct)
-            return F.when(
-                value.isNotNull(), F.size(value) - F.size(F.array_distinct(value))
-            ).otherwise(F.lit(0))
-        arr_str = stringify(value, dtype)
+            errs = F.size(value) - F.size(F.array_distinct(value))
+        else:
+            def per_elem(x, i):
+                dup = F.exists(F.slice(value, F.lit(1), i), lambda y: y.eqNullSafe(x))
+                arg = stringify(x, dtype.elementType)
+                return self._err_if(
+                    dup, self._err("uniqueItems", schema, value, dtype, path, arg)
+                )
 
-        def per_elem(x, i):
-            dup = F.exists(F.slice(value, F.lit(1), i), lambda y: y.eqNullSafe(x))
-            return F.when(
-                dup,
-                F.struct(
-                    F.lit("uniqueItems").alias("code"),
-                    F.lit(self.messages.get("uniqueItems")).alias("message"),
-                    arr_str.alias("value"),
-                    stringify(x, dtype.elementType).alias("arg"),
-                    path.alias("path"),
-                ),
-            ).otherwise(F.lit(None).cast(ERROR_TYPE.simpleString()))
-
-        errs = F.filter(F.transform(value, per_elem), lambda c: c.isNotNull())
-        return F.when(value.isNotNull(), errs).otherwise(_empty())
+            errs = F.filter(F.transform(value, per_elem), lambda c: c.isNotNull())
+        return self._gate(value.isNotNull(), errs)
 
     def _member_missing(self, dtype, value, key: str) -> Column:
         if isinstance(dtype, T.StructType):
@@ -492,10 +511,10 @@ class ColumnValidator:
         valids = [self._is_ok(p) for p in pairs]
         if name == "allOf":
             frags = [
-                F.when(
+                self._gate(
                     ~v,
                     self._cat([self._single(self._err("allOf", schema, value, dtype, path)), p]),
-                ).otherwise(self._frag_empty())
+                )
                 for v, p in zip(valids, pairs)
             ]
             return self._cat(frags)
@@ -505,10 +524,10 @@ class ColumnValidator:
                 any_valid = any_valid | v
             # on failure every branch was tried: anyOf error + all sub-errors
             all_errs = self._cat(pairs)
-            return F.when(
+            return self._gate(
                 ~any_valid,
                 self._cat([self._single(self._err("anyOf", schema, value, dtype, path)), all_errs]),
-            ).otherwise(self._frag_empty())
+            )
         if name == "oneOf":
             cnt = valids[0].cast("int")
             for v in valids[1:]:
@@ -534,13 +553,13 @@ class ColumnValidator:
             # reference calls the dep sub-walker with no path (fresh root)
             sub_errs = self._node(spec, dtype, value, F.lit(""), is_root=True)
             frags.append(
-                F.when(
+                self._gate(
                     trigger & ~self._is_ok(sub_errs),
                     self._cat([
                         self._single(self._err("dependency", schema, value, dtype, path, dep)),
                         sub_errs,
                     ]),
-                ).otherwise(self._frag_empty())
+                )
             )
         return self._cat(frags)
 
@@ -577,14 +596,6 @@ class ColumnValidator:
     # ------------------------------------------------------------- children
 
     def _children_items(self, schema, dtype, value, path) -> Column | None:
-        prev = (self.parent_value, self.parent_dtype)
-        self.parent_value, self.parent_dtype = value, dtype
-        try:
-            return self._children_items_inner(schema, dtype, value, path)
-        finally:
-            self.parent_value, self.parent_dtype = prev
-
-    def _children_items_inner(self, schema, dtype, value, path) -> Column | None:
         items = schema.get("items")
         additional = schema.get("additionalItems")
         if items is None and additional is None:
@@ -592,6 +603,7 @@ class ColumnValidator:
         if not isinstance(dtype, T.ArrayType):
             return None
         et = dtype.elementType
+        present = value.isNotNull()
         if not isinstance(items, list):
             item_schema = items if isinstance(items, dict) else {}
 
@@ -599,73 +611,43 @@ class ColumnValidator:
                 p = F.concat(path, F.lit("/"), i.cast("string"))
                 return self._node(item_schema, et, x, p)
 
-            if self.count_only:
-                frag = F.aggregate(
-                    F.transform(value, per_elem), F.lit(0), lambda acc, x: acc + x
-                )
-            else:
-                frag = F.flatten(F.transform(value, per_elem))
-            return F.when(value.isNotNull(), frag).otherwise(self._frag_empty())
+            return self._gate(present, self._fold(F.transform(value, per_elem)))
 
         # tuple form
-        frags = []
-        for k, sub in enumerate(items):
-            elem = F.get(value, k)
-            p = F.concat(path, F.lit(f"/{k}"))
-            frags.append(
-                F.when(value.isNotNull(), self._node(sub, et, elem, p)).otherwise(
-                    self._frag_empty()
-                )
+        frags = [
+            self._gate(
+                present, self._node(sub, et, F.get(value, k), F.concat(path, F.lit(f"/{k}")))
             )
+            for k, sub in enumerate(items)
+        ]
         if additional is not None and additional is not True:
             n = len(items)
-            if additional is False:
-                if self.count_only:
-                    tail = F.size(value) - n
-                else:
-                    def per_extra(x, i):
-                        p = F.concat(path, F.lit("/"), (i + n).cast("string"))
-                        return F.struct(
-                            F.lit("additionalItems").alias("code"),
-                            F.lit(self.messages.get("additionalItems")).alias("message"),
-                            stringify(x, et).alias("value"),
-                            F.lit(None).cast("string").alias("arg"),
-                            p.alias("path"),
-                        )
+            rest = F.slice(value, n + 1, 1 << 30)
 
-                    tail = F.transform(F.slice(value, n + 1, 1 << 30), per_extra)
-            else:
-                def per_extra(x, i):
-                    p = F.concat(path, F.lit("/"), (i + n).cast("string"))
-                    return self._node(additional, et, x, p)
+            def extra_path(i):
+                return F.concat(path, F.lit("/"), (i + n).cast("string"))
 
-                mapped = F.transform(F.slice(value, n + 1, 1 << 30), per_extra)
-                if self.count_only:
-                    tail = F.aggregate(mapped, F.lit(0), lambda acc, x: acc + x)
-                else:
-                    tail = F.flatten(mapped)
-            frags.append(
-                F.when(value.isNotNull() & (F.size(value) > n), tail).otherwise(
-                    self._frag_empty()
+            if additional is not False:
+                tail = self._fold(
+                    F.transform(rest, lambda x, i: self._node(additional, et, x, extra_path(i)))
                 )
-            )
+            elif self.count_only:
+                tail = F.size(value) - n
+            else:
+                tail = F.transform(
+                    rest, lambda x, i: self._err("additionalItems", schema, x, et, extra_path(i))
+                )
+            frags.append(self._gate(present & (F.size(value) > n), tail))
         return self._cat(frags)
 
     def _children_properties(self, schema, dtype, value, path) -> Column | None:
-        prev = (self.parent_value, self.parent_dtype)
-        self.parent_value, self.parent_dtype = value, dtype
-        try:
-            return self._children_properties_inner(schema, dtype, value, path)
-        finally:
-            self.parent_value, self.parent_dtype = prev
-
-    def _children_properties_inner(self, schema, dtype, value, path) -> Column | None:
         props = schema.get("properties") or {}
         pattern_props = schema.get("patternProperties") or {}
         additional = schema.get("additionalProperties")
         if not props and not pattern_props and additional is None:
             return None
         frags: list[Column] = []
+        present = value.isNotNull()
 
         if isinstance(dtype, T.StructType):
             fields = {f.name: f.dataType for f in dtype.fields}
@@ -673,61 +655,51 @@ class ColumnValidator:
                 cd = fields.get(k, _UNDEFINED_T)
                 cv = value.getField(k) if k in fields else F.lit(None)
                 p = F.concat(path, F.lit("/" + k))
-                child = self._node(sub, cd, cv, p)
-                frags.append(
-                    F.when(value.isNotNull(), child).otherwise(self._frag_empty())
-                )
+                frags.append(self._gate(present, self._node(sub, cd, cv, p)))
             # patternProperties over a closed struct: match against the
             # statically-known field names at compile time
             declared = set(props)
-            matched_by_pattern = set()
-            if pattern_props:
-                import re as _re
-
-                for pat, sub in pattern_props.items():
-                    rx = _re.compile(pat)
-                    for fname, fdt in fields.items():
-                        if rx.search(fname):
-                            matched_by_pattern.add(fname)
-                            p = F.concat(path, F.lit("/" + fname))
-                            child = self._node(sub, fdt, value.getField(fname), p)
-                            frags.append(
-                                F.when(value.isNotNull(), child).otherwise(self._frag_empty())
-                            )
-            if additional is False:
-                # a struct is closed: extra = declared-in-data fields not in
-                # schema; with typed data this is static — non-null undeclared
-                # fields error per key (value-level "presence" = non-null)
+            for pat, sub in pattern_props.items():
+                rx = re.compile(pat)
                 for fname, fdt in fields.items():
-                    if fname in declared or fname in matched_by_pattern:
+                    if rx.search(fname):
+                        declared.add(fname)
+                        p = F.concat(path, F.lit("/" + fname))
+                        child = self._node(sub, fdt, value.getField(fname), p)
+                        frags.append(self._gate(present, child))
+            # a struct is closed: extra = declared-in-data fields not in the
+            # schema; with typed data this is static — non-null undeclared
+            # fields error per key (value-level "presence" = non-null)
+            if additional is False or isinstance(additional, dict):
+                for fname, fdt in fields.items():
+                    if fname in declared:
                         continue
                     fv = value.getField(fname)
                     p = F.concat(path, F.lit("/" + fname))
-                    frags.append(
-                        self._one(
-                            value.isNotNull() & fv.isNotNull(),
-                            self._err("additionalProperties", schema, fv, fdt, p),
-                        )
-                    )
-            elif isinstance(additional, dict):
-                for fname, fdt in fields.items():
-                    if fname in declared or fname in matched_by_pattern:
-                        continue
-                    p = F.concat(path, F.lit("/" + fname))
-                    child = self._node(additional, fdt, value.getField(fname), p)
-                    frags.append(
-                        F.when(value.isNotNull(), child).otherwise(self._frag_empty())
-                    )
+                    if additional is False:
+                        err = self._err("additionalProperties", schema, fv, fdt, p)
+                        frags.append(self._one(present & fv.isNotNull(), err))
+                    else:
+                        frags.append(self._gate(present, self._node(additional, fdt, fv, p)))
         elif isinstance(dtype, T.MapType):
             vt = dtype.valueType
             for k, sub in props.items():
                 cv = F.element_at(value, F.lit(k))
                 p = F.concat(path, F.lit("/" + k))
-                child = self._node(sub, vt, cv, p)
-                frags.append(
-                    F.when(value.isNotNull(), child).otherwise(self._frag_empty())
+                frags.append(self._gate(present, self._node(sub, vt, cv, p)))
+
+            def key_path(k):
+                return F.concat(path, F.lit("/"), k)
+
+            for pat, sub in pattern_props.items():
+                per_key = F.transform(
+                    F.map_keys(value),
+                    lambda k: self._gate(
+                        k.rlike(pat), self._node(sub, vt, F.element_at(value, k), key_path(k))
+                    ),
                 )
-            if pattern_props or additional is not None:
+                frags.append(self._gate(present, self._fold(per_key)))
+            if additional is False:
                 declared_arr = F.array(*[F.lit(k) for k in props]) if props else F.array().cast("array<string>")
                 extra_keys = F.filter(
                     F.map_keys(value),
@@ -735,60 +707,25 @@ class ColumnValidator:
                     if props
                     else F.lit(True),
                 )
-                for pat, sub in pattern_props.items():
-                    def per_key(k, _pat=pat, _sub=sub):
-                        p = F.concat(path, F.lit("/"), k)
-                        return F.when(
-                            k.rlike(_pat),
-                            self._node(_sub, vt, F.element_at(value, k), p),
-                        ).otherwise(self._frag_empty())
 
-                    mapped = F.transform(F.map_keys(value), per_key)
-                    combined = (
-                        F.aggregate(mapped, F.lit(0), lambda acc, x: acc + x)
-                        if self.count_only
-                        else F.flatten(mapped)
-                    )
-                    frags.append(
-                        F.when(value.isNotNull(), combined).otherwise(self._frag_empty())
-                    )
-                if additional is False:
-                    pats = list(pattern_props)
+                def unmatched(k):
+                    out = F.lit(True)
+                    for pat in pattern_props:
+                        out = out & ~k.rlike(pat)
+                    return out
 
-                    def unmatched_cond(k):
-                        unmatched = F.lit(True)
-                        for pat in pats:
-                            unmatched = unmatched & ~k.rlike(pat)
-                        return unmatched
-
-                    if self.count_only:
-                        frags.append(
-                            F.when(
-                                value.isNotNull(),
-                                F.size(F.filter(extra_keys, unmatched_cond)),
-                            ).otherwise(F.lit(0))
+                if self.count_only:
+                    extra = F.size(F.filter(extra_keys, unmatched))
+                else:
+                    def per_extra(k):
+                        err = self._err(
+                            "additionalProperties", schema, F.element_at(value, k), vt,
+                            key_path(k),
                         )
-                    else:
-                        def per_extra(k):
-                            return F.when(
-                                unmatched_cond(k),
-                                F.struct(
-                                    F.lit("additionalProperties").alias("code"),
-                                    F.lit(self.messages.get("additionalProperties")).alias("message"),
-                                    F.element_at(value, k).cast("string").alias("value"),
-                                    F.lit(None).cast("string").alias("arg"),
-                                    F.concat(path, F.lit("/"), k).alias("path"),
-                                ),
-                            ).otherwise(F.lit(None).cast(ERROR_TYPE.simpleString()))
+                        return self._err_if(unmatched(k), err)
 
-                        frags.append(
-                            F.when(
-                                value.isNotNull(),
-                                F.filter(
-                                    F.transform(extra_keys, per_extra), lambda c: c.isNotNull()
-                                ),
-                            ).otherwise(_empty())
-                        )
+                    extra = F.filter(F.transform(extra_keys, per_extra), lambda c: c.isNotNull())
+                frags.append(self._gate(present, extra))
         else:
             return None
 
@@ -800,9 +737,3 @@ class ColumnValidator:
 def validate_dataframe(df, schema: dict, options: dict | None = None):
     """Row-as-instance validation: append ``errors`` + ``valid`` columns."""
     return ColumnValidator(schema, options).apply(df)
-
-
-def count_violations(df, schema: dict, options: dict | None = None):
-    """Verdict fast path: append ``n_violations`` (int) + ``valid`` with no
-    error-record construction — same conditions, primitive-only codegen."""
-    return ColumnValidator(schema, options, count_only=True).apply(df)

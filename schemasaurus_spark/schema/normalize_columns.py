@@ -39,8 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from schemasaurus_spark.schema.columns import SchemaUnsupportedError, _is_undef
-from schemasaurus_spark.schema.walker import resolve_ref
+from schemasaurus_spark.schema.columns import SchemaUnsupportedError, _is_undef, ref_step
 
 _INT_RE = r"^[+-]?\d+"
 _FLOAT_RE = r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?"
@@ -66,8 +65,7 @@ def _js_truthy(col: Column, dtype) -> Column:
             .when(lowered.isin("false", "off"), F.lit(False))
             .otherwise(F.length(col) > 0)  # JS Boolean(non-empty) == true
         )
-    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-                          T.FloatType, T.DoubleType, T.DecimalType)):
+    if isinstance(dtype, T.NumericType):
         return col.cast("double") != 0
     # objects/arrays are truthy; null handled by caller (coercions skip null)
     return F.lit(True)
@@ -98,20 +96,9 @@ class ColumnNormalizer:
     # ------------------------------------------------------------- the walk
 
     def _node(self, schema: dict, dtype, value: Column):
-        sid = id(schema)
-        depth = self._depth.get(sid, 0)
-        if depth >= self.max_ref_depth:
-            return value, dtype
-        self._depth[sid] = depth + 1
-        try:
-            if isinstance(schema, dict) and "$ref" in schema:
-                resolved = resolve_ref(
-                    self.options.get("loader"), self.schema_root, schema["$ref"]
-                )
-                return self._node(resolved, dtype, value)
-            return self._node_body(schema, dtype, value)
-        finally:
-            self._depth[sid] = depth
+        return ref_step(
+            self, schema, lambda: (value, dtype), lambda s: self._node_body(s, dtype, value)
+        )
 
     def _node_body(self, schema: dict, dtype, value: Column):
         # fire order mirrors the walker: default -> type coercion -> children.
@@ -186,9 +173,9 @@ class ColumnNormalizer:
                 return null_kept(F.when(value, "true").otherwise("false"), T.StringType())
             return null_kept(value.cast("string"), T.StringType())
         if t == "integer":
-            if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+            if isinstance(dtype, T.IntegralType):
                 return value, dtype
-            if isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType)):
+            if isinstance(dtype, T.FractionalType):
                 # JS parseInt(number) truncates toward zero, as does Spark's
                 # double -> bigint cast
                 return null_kept(value.cast("double").cast("bigint"), T.LongType())
@@ -196,9 +183,7 @@ class ColumnNormalizer:
                 return null_kept(_js_parse_int(value), T.LongType())
             raise SchemaUnsupportedError(f"integer coercion from {dtype.simpleString()}")
         if t == "number":
-            if isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType)):
-                return value, dtype
-            if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+            if isinstance(dtype, T.NumericType):
                 return value, dtype  # JS has one number type; ints are numbers
             if isinstance(dtype, T.StringType):
                 return null_kept(_js_parse_float(value), T.DoubleType())
@@ -221,10 +206,16 @@ class ColumnNormalizer:
         items = schema.get("items")
         if isinstance(items, dict) and isinstance(dtype, T.ArrayType):
             et = dtype.elementType
-            probe, new_et = self._node(items, et, F.lit(None).cast(et))
-            mapped = F.transform(value, lambda x: self._node(items, et, x)[0])
-            out = F.when(value.isNull(), F.lit(None).cast(T.ArrayType(new_et))).otherwise(mapped)
-            return out, T.ArrayType(new_et)
+            new_et = []  # the element type the one compile of ``items`` yields
+
+            def per_elem(x):
+                out, t = self._node(items, et, x)
+                new_et.append(t)
+                return out
+
+            mapped = F.transform(value, per_elem)
+            new_t = T.ArrayType(new_et[0])
+            return F.when(value.isNull(), F.lit(None).cast(new_t)).otherwise(mapped), new_t
 
         props = schema.get("properties")
         if isinstance(props, dict) and isinstance(dtype, T.StructType):
@@ -295,11 +286,9 @@ def _literal(v: Any):
 
 
 def _compatible(dtype, lit_t) -> bool:
-    numeric = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-               T.FloatType, T.DoubleType, T.DecimalType)
     if isinstance(lit_t, T.NullType):
         return True
-    if isinstance(dtype, numeric) and isinstance(lit_t, numeric):
+    if isinstance(dtype, T.NumericType) and isinstance(lit_t, T.NumericType):
         return True
     if type(dtype) is type(lit_t):
         return True

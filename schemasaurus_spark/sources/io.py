@@ -119,6 +119,23 @@ def write_text_file(spark: SparkSession, path: str, text: str) -> None:
         out.close()
 
 
+def write_batch(df: DataFrame, batch_id: int, path: str) -> None:
+    """Write one micro-batch's rows as the ``batch_id=<n>`` partition of the
+    parquet dataset at *path*.
+
+    ``foreachBatch`` delivers at least once: a crash between a sink's write
+    and the checkpoint commit replays the batch.  Dynamic partition
+    overwrite replaces only this batch's partition, so a replay rewrites
+    its rows instead of duplicating them."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
 def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     """A small driver-side table (a snapshot's grid rows) as a JVM-local frame.
 

@@ -49,6 +49,7 @@ from schemasaurus_spark.operators.bloom import (
     build_bloom_bitmap,
 )
 from schemasaurus_spark.operators.dedup import normalize_text
+from schemasaurus_spark.sources.io import write_batch
 
 
 def _or_bytes(a: bytes, b: bytes) -> bytes:
@@ -151,20 +152,8 @@ def bloom_novelty_stream(
             rejected = lost.withColumn("reason", F.lit("in_batch")).unionByName(
                 seen.withColumn("reason", F.lit("seen"))
             )
-            (
-                accepted.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(accepted_dir)
-            )
-            (
-                rejected.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{out_dir}/rejected")
-            )
+            write_batch(accepted, batch_id, accepted_dir)
+            write_batch(rejected, batch_id, f"{out_dir}/rejected")
             # grow the filter with what this batch admitted (batch-sized job)
             state["bitmap"] = _or_bytes(
                 state["bitmap"],

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from schemasaurus_spark.operators.cusum import FP_SCALE, quantize
+from schemasaurus_spark.sources.io import write_batch
 
 OUTPUT_SCHEMA = (
     "entity string, event_id bigint, ts_us bigint, value double, "
@@ -144,13 +145,7 @@ def cusum_monitor_stream(
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_dir}/cusum")
-        )
+        write_batch(batch_df, batch_id, f"{out_dir}/cusum")
 
     writer = (
         stats.writeStream.foreachBatch(sink)

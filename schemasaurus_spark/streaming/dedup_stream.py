@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from schemasaurus_spark.operators.text import fingerprint
+from schemasaurus_spark.sources.io import write_batch
 
 OUTPUT_SCHEMA = "fingerprint string, doc_id string, n_occurrences bigint"
 STATE_SCHEMA = "n bigint"
@@ -84,13 +85,7 @@ def dedup_stream(
     firsts = first_seen_stream(stream, text_col, id_col)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_dir}/first_seen")
-        )
+        write_batch(batch_df, batch_id, f"{out_dir}/first_seen")
 
     writer = (
         firsts.writeStream.foreachBatch(sink)

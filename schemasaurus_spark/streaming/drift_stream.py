@@ -26,7 +26,6 @@ pipeline wants ("did THIS increment look like the baseline?").
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from schemasaurus_spark.operators.snapshot import (
     Snapshot,
@@ -34,6 +33,7 @@ from schemasaurus_spark.operators.snapshot import (
     drift_vs_snapshot,
     read_snapshot,
 )
+from schemasaurus_spark.sources.io import write_batch
 
 REPORT_DDL = (
     "column string, test string, statistic double, psi double, p_value double, "
@@ -49,7 +49,7 @@ def make_drift_sink(base: Snapshot, spec: SnapshotSpec, out_dir: str, alpha: flo
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         report = drift_vs_snapshot(batch_df, base, spec, alpha)
-        (
+        write_batch(
             spark.createDataFrame(
                 [tuple(r[k] for k in (
                     "column", "test", "statistic", "psi", "p_value", "drifted",
@@ -57,12 +57,9 @@ def make_drift_sink(base: Snapshot, spec: SnapshotSpec, out_dir: str, alpha: flo
                     "distinct_base", "distinct_cur",
                 )) for r in report],
                 REPORT_DDL,
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_dir}/drift_log")
+            ),
+            batch_id,
+            f"{out_dir}/drift_log",
         )
 
     return sink

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from schemasaurus_spark.sources.io import write_batch
+
 __all__ = ["merge_mg", "heavy_hitters_stream"]
 
 
@@ -114,15 +116,12 @@ def heavy_hitters_stream(
         sketch_rows = [
             (item, int(c), int(n_total)) for item, c in merged
         ] or [(None, 0, int(n_total))]
-        (
+        write_batch(
             spark.createDataFrame(
                 sketch_rows, "item string, est_count long, n_total long"
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_dir}/sketch")
+            ),
+            batch_id,
+            f"{out_dir}/sketch",
         )
         report_rows = [
             (item, int(c), int(n_total), bool(c > threshold))
@@ -130,16 +129,13 @@ def heavy_hitters_stream(
             if item is not None
         ]
         if report_rows:
-            (
+            write_batch(
                 spark.createDataFrame(
                     report_rows,
                     "item string, est_count long, n_total long, certain boolean",
-                )
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{out_dir}/report")
+                ),
+                batch_id,
+                f"{out_dir}/report",
             )
 
     writer = (

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from schemasaurus_spark.operators.dedup import incremental_near_duplicates
+from schemasaurus_spark.sources.io import write_batch
 
 
 def incremental_dedup_stream(
@@ -85,21 +86,10 @@ def incremental_dedup_stream(
             ).persist(StorageLevel.MEMORY_AND_DISK)
             flagged = pairs.select(F.col("batch_id").alias(id_col)).distinct()
             accepted = batch_df.join(flagged, id_col, "left_anti")
-            (
-                pairs.withColumnRenamed("batch_id", "new_id")
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{out_dir}/flagged")
+            write_batch(
+                pairs.withColumnRenamed("batch_id", "new_id"), batch_id, f"{out_dir}/flagged"
             )
-            (
-                accepted.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{out_dir}/accepted")
-            )
+            write_batch(accepted, batch_id, f"{out_dir}/accepted")
             pairs.unpersist()
         finally:
             batch_df.unpersist()

@@ -27,12 +27,12 @@ the accumulated corpus.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from schemasaurus_spark.schema.profile import (
     json_schema_profile,
     schema_profile_drift,
 )
+from schemasaurus_spark.sources.io import write_batch
 
 DRIFT_LOG_COLS = [
     "path",
@@ -56,14 +56,7 @@ def make_schema_drift_sink(baseline_profile: DataFrame, json_col: str, out_dir: 
         report = schema_profile_drift(
             baseline_profile, json_schema_profile(batch_df, json_col)
         )
-        (
-            report.select(*DRIFT_LOG_COLS)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_dir}/schema_drift_log")
-        )
+        write_batch(report.select(*DRIFT_LOG_COLS), batch_id, f"{out_dir}/schema_drift_log")
 
     return sink
 

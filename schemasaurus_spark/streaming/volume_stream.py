@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from schemasaurus_spark.operators.monitor import bucket_counts_filled, volume_anomalies
+from schemasaurus_spark.sources.io import write_batch
 
 
 def volume_baseline(df: DataFrame, ts_col: str, bucket: str = "hour") -> DataFrame:
@@ -67,13 +68,8 @@ def make_volume_sink(
     repeated batch_id to prove replay idempotence)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            volume_report(batch_df, ts_col, bucket, baseline, z)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_dir}/volume_log")
+        write_batch(
+            volume_report(batch_df, ts_col, bucket, baseline, z), batch_id, f"{out_dir}/volume_log"
         )
 
     return sink

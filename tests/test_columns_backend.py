@@ -151,6 +151,69 @@ def test_count_mode_structural_keywords(spark):
     assert [r.n for r in full] == [r.n for r in fast]
 
 
+# (schema, row DDL, instances): nodes whose error records were once made
+# outside ColumnValidator._err
+WALKER_RECORD_CASES = {
+    "map_pattern_properties": (
+        {"properties": {"m": {"patternProperties": {"^a": {"minimum": 5}}}}},
+        "m map<string,int>",
+        [{"m": {"a1": 1, "a2": 7, "b": 0}}, {"m": {}}, {}],
+    ),
+    "map_container_value": (
+        {"properties": {"m": {"properties": {"a": {}}, "additionalProperties": False}}},
+        "m map<string,struct<x:int>>",
+        [{"m": {"a": {"x": 0}, "k": {"x": 1}}}],
+    ),
+    "node_messages": (
+        {
+            "properties": {
+                "u": {"uniqueItems": True, "messages": {"uniqueItems": "dup"}},
+                "t": {
+                    "items": [{}],
+                    "additionalItems": False,
+                    "messages": {"additionalItems": "extra"},
+                },
+                "m": {
+                    "additionalProperties": False,
+                    "messages": {"additionalProperties": "stray"},
+                },
+                "n": {"maxItems": 1, "messages": {"maxItems": "long"}},
+            }
+        },
+        "u array<int>, t array<int>, m map<string,int>, n array<int>",
+        [{"u": [1, 1], "t": [1, 2], "m": {"k": 1}, "n": [1, 2]}],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(WALKER_RECORD_CASES))
+def test_error_records_match_walker(spark, case):
+    """Full (code, message, value, arg, path) records equal the walker's,
+    and count mode equals the walker's error count."""
+    from schemasaurus_spark.schema.batch import _pointer, _stringify
+    from schemasaurus_spark.schema.columns import ColumnValidator
+
+    schema, ddl, instances = WALKER_RECORD_CASES[case]
+    df = spark.createDataFrame([], ddl)
+    df = spark.createDataFrame(
+        [tuple(inst.get(c) for c in df.columns) for inst in instances], ddl
+    )
+    walker = new_validator(schema)
+    want = [
+        [
+            (e["code"], e["message"], _stringify(e["value"]), _stringify(e["arg"]),
+             _pointer(e["path"]))
+            for e in walker(inst)["errors"]
+        ]
+        for inst in instances
+    ]
+    assert any(want)
+    full = ColumnValidator(schema).apply(df).collect()
+    assert [[tuple(e) for e in r.errors] for r in full] == want
+    fast = ColumnValidator(schema, count_only=True).apply(df).collect()
+    assert [r.n_violations for r in fast] == [len(w) for w in want]
+
+
 def test_span_sequence_invariant(spark, docs):
     """Per-row span-sequence equality (kind, text, media_ref, order): the
     engine's projection must reproduce the source order exactly."""

@@ -22,8 +22,8 @@ def _expected(rows, ascending):
     return out
 
 
-def _check(spark, rows, ascending, n_buckets):
-    df = spark.createDataFrame(rows, "v double, a long, b long")
+def _check(spark, rows, ascending, n_buckets, v_type="double"):
+    df = spark.createDataFrame(rows, f"v {v_type}, a long, b long")
     got = {
         r["v"]: (r["_cum_a"], r["_cum_b"])
         for r in exclusive_prefix(
@@ -52,6 +52,20 @@ def test_degenerate_shapes(spark):
     out = exclusive_prefix(df, "v", ["a", "b"])
     assert {"_cum_a", "_cum_b"} <= set(out.columns)
     assert out.count() == 0
+
+
+def test_non_numeric_order_keys(spark):
+    """String keys have no percentile bounds (percentile_approx casts them
+    to double and fails), so they run in one bucket; date keys keep their
+    bounds.  Both give the exact prefix."""
+    import datetime
+
+    strings = [("k%03d" % i, i % 7, i) for i in range(100)]
+    day = datetime.date(2024, 1, 1)
+    dates = [(day + datetime.timedelta(days=3 * i), i % 5, 1) for i in range(100)]
+    for ascending in (True, False):
+        _check(spark, strings, ascending, 4, "string")
+        _check(spark, dates, ascending, 4, "date")
 
 
 def test_no_partitionless_window_on_continuous_signal(spark):
