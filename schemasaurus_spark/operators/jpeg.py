@@ -655,8 +655,13 @@ def decode_jpeg_luma(data: bytes) -> np.ndarray:
     """JPEG bytes -> exact decoded luma (Y) samples as int64 (h, w),
     rounded+clipped from the IDCT output, BEFORE any color conversion.
     For grayscale DC-only content this is bit-exact vs the source."""
-    planes, _, _ = decode_jpeg_planes(data)
-    return np.clip(np.round(planes[0]), 0, 255).astype(np.int64)
+    return plane_luma(decode_jpeg_planes(data)[0][0])
+
+
+def plane_luma(y_plane: np.ndarray) -> np.ndarray:
+    """A decoded Y plane (``decode_jpeg_planes(data)[0][0]``) -> the luma
+    samples of ``decode_jpeg_luma``: rounded, clipped, int64."""
+    return np.clip(np.round(y_plane), 0, 255).astype(np.int64)
 
 
 # ---------------------------------------------------------------------------

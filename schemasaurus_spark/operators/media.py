@@ -438,21 +438,14 @@ def extract_jpeg_features(media: DataFrame) -> DataFrame:
     def batches(it: _It) -> _It:
         import pandas as pd
 
-        from schemasaurus_spark.operators.jpeg import (
-            decode_jpeg_luma,
-            decode_jpeg_planes,
-        )
+        from schemasaurus_spark.operators.jpeg import decode_jpeg_planes, plane_luma
 
         for pdf in it:
             rows = []
             for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                data = bytes(payload)
-                planes, h, w = decode_jpeg_planes(data)
-                luma = decode_jpeg_luma(data)
-                rows.append(
-                    (ref, w, h, len(planes), int(luma.sum()),
-                     int(luma.sum()) / float(w * h))
-                )
+                planes, h, w = decode_jpeg_planes(bytes(payload))
+                luma_sum = int(plane_luma(planes[0]).sum())
+                rows.append((ref, w, h, len(planes), luma_sum, luma_sum / float(w * h)))
             yield pd.DataFrame(
                 rows,
                 columns=["media_ref", "width", "height", "channels",

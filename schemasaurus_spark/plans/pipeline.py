@@ -49,7 +49,7 @@ from schemasaurus_spark.operators.sampling import (
 )
 from schemasaurus_spark.operators.substring_dedup import remove_duplicate_passages
 from schemasaurus_spark.operators.text import quality_score
-from schemasaurus_spark.schema.columns import validate_dataframe
+from schemasaurus_spark.schema.columns import ColumnValidator
 
 
 @dataclass
@@ -109,8 +109,8 @@ class CorpusPipeline:
     split_seed: int = 0
 
     def valid_docs(self, docs: DataFrame) -> DataFrame:
-        v = validate_dataframe(docs, self.schema)
-        return v.where(F.col("valid")).drop("valid", "errors")
+        v = ColumnValidator(self.schema).counted(docs)
+        return v.where(F.col("valid")).drop("valid", "n_violations")
 
     def quality_docs(self, docs: DataFrame) -> DataFrame:
         q = docs.withColumn("quality", quality_score(F.col(self.text_col)))

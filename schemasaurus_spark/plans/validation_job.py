@@ -4,10 +4,12 @@ documents --ColumnValidator--> +errors +valid
    ├── violations:  explode errors -> (doc_id, span_idx, keyword, json_pointer, ...)
    └── verdicts:    per-partition pass/fail + counts (two-phase, no collapse)
 
-The validation itself is one whole-stage-codegen'd projection (no shuffle,
-no UDF, no explode on the verdict path); only the violations sink explodes
-and only the verdict aggregation shuffles — and that shuffle is pre-reduced
-by partition before it moves.
+The validation itself is one projection (no shuffle, no UDF, no explode on
+the verdict path).  ``DOCUMENT_SCHEMA`` validates ``spans`` with
+higher-order functions, which run outside whole-stage codegen: that
+``Project`` carries no ``*(n)`` marker in ``explain()``.  Only the
+violations sink explodes and only the verdict aggregation shuffles — and
+that shuffle is pre-reduced by partition before it moves.
 """
 
 from __future__ import annotations
@@ -55,37 +57,15 @@ class ValidationJob:
     def __init__(self, schema: dict | None = None, options: dict | None = None):
         self.schema = schema or DOCUMENT_SCHEMA
         self.validator = ColumnValidator(self.schema, options)
-        # verdict fast path: same compiled conditions, integer counts only —
-        # no error structs / to_json / array allocation in the hot loop
-        self.counter = ColumnValidator(self.schema, options, count_only=True)
 
-    def validated(self, docs: DataFrame, guarded: bool = True) -> DataFrame:
-        """Append full error records + valid.
-
-        ``guarded`` (default): the expensive error-record array (structs,
-        JSON value stringify, per-fragment allocation) is gated behind the
-        cheap integer count expression — valid rows (the overwhelming
-        majority at scale) never allocate a single error object.  Count
-        parity with the array backend is test-asserted, so the guard is
-        semantics-preserving.
-
-        ``valid`` is the guard's own condition, not ``size(errors) = 0``:
-        a filter on ``valid`` (``violations``) is pushed below the
-        projection, and there it would build an invalid row's error array
-        a second time.
-        """
-        if not guarded:
-            return self.validator.apply(docs)
-        row_type = docs.schema
-        cnt = self.counter.row_errors(row_type)
-        full = self.validator.row_errors(row_type)
-        has_errors = F.coalesce(cnt > 0, F.lit(False))
-        return docs.withColumn(
-            "errors", self.validator._gate(has_errors, full)
-        ).withColumn("valid", ~has_errors)
+    def validated(self, docs: DataFrame) -> DataFrame:
+        """Append full error records + valid, the error array gated behind
+        the violation count (``ColumnValidator.apply``)."""
+        return self.validator.apply(docs)
 
     def counted(self, docs: DataFrame) -> DataFrame:
-        return self.counter.apply(docs)
+        """Append ``n_violations`` + valid — the verdict fast path."""
+        return self.validator.counted(docs)
 
     def violations(self, validated: DataFrame, id_col: str = "doc_id") -> DataFrame:
         """One row per violation: (doc_id, span_idx, keyword, json_pointer,

@@ -46,12 +46,10 @@ def _stringify(v) -> str | None:
     return str(v)
 
 
-class BatchValidator:
-    """validate a JSON-string column with reference-exact walker semantics.
-
-    >>> BatchValidator(schema).apply_json(df, "doc_json", keep=["doc_id"])
-    DataFrame[doc_id, errors, valid]
-    """
+class _JsonWalker:
+    """The scaffold the two walker classes share: the ``on_parse_error``
+    check, the ``keep`` -> output DDL, and the compile-once-per-worker
+    ``mapInPandas`` loop."""
 
     def __init__(
         self,
@@ -59,77 +57,87 @@ class BatchValidator:
         options: dict | None = None,
         on_parse_error: str = "record",
     ):
-        """``on_parse_error``: malformed JSON text yields ``"record"`` — an
-        invalid row with a single ``jsonParse`` error (path "", value = the
-        offending text) — or ``"raise"`` to fail the task.  Parsing is our
-        extension: the reference takes already-parsed values, so it has no
-        counterpart to mirror here."""
+        """``on_parse_error``: what a malformed JSON text yields —
+        ``"record"`` (the class's parse-error row) or ``"raise"`` to fail the
+        task.  Parsing is our extension: the reference takes already-parsed
+        values, so it has no counterpart to mirror here."""
         if on_parse_error not in ("record", "raise"):
             raise ValueError(f"on_parse_error must be record|raise, got {on_parse_error!r}")
         self.schema = schema
         self.options = options
         self.on_parse_error = on_parse_error
 
-    def apply_json(
-        self, df: DataFrame, json_col: str, keep: list[str] | None = None
-    ) -> DataFrame:
+    def _map(self, df: DataFrame, json_col: str, keep: list[str] | None,
+             out_ddl: str, out_cols: tuple[str, ...], compile_row) -> DataFrame:
+        """``keep`` columns plus ``out_cols``, whose values ``row(text)``
+        returns as a tuple; ``compile_row()`` makes ``row`` once per worker,
+        so every batch reuses the compiled walker."""
         keep = keep or []
-        schema, options = self.schema, self.options
-        on_parse_error = self.on_parse_error
-        out_ddl = ", ".join(
-            [f"{c} {df.schema[c].dataType.simpleString()}" for c in keep] + [ERRORS_DDL]
+        ddl = ", ".join(
+            [f"{c} {df.schema[c].dataType.simpleString()}" for c in keep] + [out_ddl]
         )
 
         def run(batches: Iterator) -> Iterator:
             import pandas as pd
 
-            # compile once per worker: every batch reuses the specialized walker
+            row = compile_row()
+            for pdf in batches:
+                vals = [row(s) for s in pdf[json_col]]
+                out = pd.DataFrame({c: pdf[c] for c in keep})
+                for i, c in enumerate(out_cols):
+                    out[c] = [v[i] for v in vals]
+                yield out
+
+        return df.mapInPandas(run, ddl)
+
+
+class BatchValidator(_JsonWalker):
+    """validate a JSON-string column with reference-exact walker semantics.
+
+    >>> BatchValidator(schema).apply_json(df, "doc_json", keep=["doc_id"])
+    DataFrame[doc_id, errors, valid]
+
+    A malformed JSON text is an invalid row with a single ``jsonParse``
+    error (path "", value = the offending text) unless ``on_parse_error``
+    is ``"raise"``.
+    """
+
+    def apply_json(
+        self, df: DataFrame, json_col: str, keep: list[str] | None = None
+    ) -> DataFrame:
+        schema, options = self.schema, self.options
+        strict = self.on_parse_error == "raise"
+
+        def compile_row():
             from schemasaurus_spark.schema.walker import new_validator
 
             validate = new_validator(schema, options)
 
-            for pdf in batches:
-                errors_out = []
-                valid_out = []
-                for s in pdf[json_col]:
-                    try:
-                        val = json.loads(s) if s is not None else None
-                    except ValueError as exc:
-                        if on_parse_error == "raise":
-                            raise
-                        errors_out.append(
-                            [
-                                {
-                                    "code": "jsonParse",
-                                    "message": str(exc),
-                                    "value": s,
-                                    "arg": None,
-                                    "path": "",
-                                }
-                            ]
-                        )
-                        valid_out.append(False)
-                        continue
-                    res = validate(val)
-                    errors_out.append(
-                        [
-                            {
-                                "code": e["code"],
-                                "message": e["message"],
-                                "value": _stringify(e["value"]),
-                                "arg": _stringify(e.get("arg")),
-                                "path": _pointer(e["path"]),
-                            }
-                            for e in res["errors"]
-                        ]
-                    )
-                    valid_out.append(res["valid"])
-                out = pd.DataFrame({c: pdf[c] for c in keep})
-                out["errors"] = errors_out
-                out["valid"] = valid_out
-                yield out
+            def row(s):
+                try:
+                    val = json.loads(s) if s is not None else None
+                except ValueError as exc:
+                    if strict:
+                        raise
+                    err = {"code": "jsonParse", "message": str(exc), "value": s,
+                           "arg": None, "path": ""}
+                    return [err], False
+                res = validate(val)
+                errors = [
+                    {
+                        "code": e["code"],
+                        "message": e["message"],
+                        "value": _stringify(e["value"]),
+                        "arg": _stringify(e.get("arg")),
+                        "path": _pointer(e["path"]),
+                    }
+                    for e in res["errors"]
+                ]
+                return errors, res["valid"]
 
-        return df.mapInPandas(run, out_ddl)
+            return row
+
+        return self._map(df, json_col, keep, ERRORS_DDL, ("errors", "valid"), compile_row)
 
 
 def validate_json_column(
@@ -139,7 +147,7 @@ def validate_json_column(
     return BatchValidator(schema, options).apply_json(df, json_col, keep)
 
 
-class BatchNormalizer:
+class BatchNormalizer(_JsonWalker):
     """Normalize a JSON-string column with reference-exact walker
     semantics (defaults, additionalProperty removal, type coercions) —
     the ELT companion to :class:`BatchValidator`.
@@ -154,57 +162,31 @@ class BatchNormalizer:
     Malformed input rows yield NULL ``normalized`` (or raise, matching
     ``on_parse_error``)."""
 
-    def __init__(
-        self,
-        schema: dict,
-        options: dict | None = None,
-        on_parse_error: str = "record",
-    ):
-        if on_parse_error not in ("record", "raise"):
-            raise ValueError(f"on_parse_error must be record|raise, got {on_parse_error!r}")
-        self.schema = schema
-        self.options = options
-        self.on_parse_error = on_parse_error
-
     def apply_json(
         self, df: DataFrame, json_col: str, keep: list[str] | None = None
     ) -> DataFrame:
-        keep = keep or []
         schema, options = self.schema, self.options
-        on_parse_error = self.on_parse_error
-        out_ddl = ", ".join(
-            [f"{c} {df.schema[c].dataType.simpleString()}" for c in keep]
-            + ["normalized string"]
-        )
+        strict = self.on_parse_error == "raise"
 
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
+        def compile_row():
             from schemasaurus_spark.schema.walker import new_normalizer
 
             normalize = new_normalizer(schema, options)
 
-            for pdf in batches:
-                out_vals = []
-                for s in pdf[json_col]:
-                    if s is None:
-                        out_vals.append(None)
-                        continue
-                    try:
-                        val = json.loads(s)
-                    except ValueError:
-                        if on_parse_error == "raise":
-                            raise
-                        out_vals.append(None)
-                        continue
-                    out_vals.append(
-                        json.dumps(normalize(val), separators=(",", ":"))
-                    )
-                out = pd.DataFrame({c: pdf[c] for c in keep})
-                out["normalized"] = out_vals
-                yield out
+            def row(s):
+                if s is None:
+                    return (None,)
+                try:
+                    val = json.loads(s)
+                except ValueError:
+                    if strict:
+                        raise
+                    return (None,)
+                return (json.dumps(normalize(val), separators=(",", ":")),)
 
-        return df.mapInPandas(run, out_ddl)
+            return row
+
+        return self._map(df, json_col, keep, "normalized string", ("normalized",), compile_row)
 
 
 def normalize_json_column(

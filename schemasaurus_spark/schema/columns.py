@@ -5,10 +5,13 @@ violation array — zero Python in the hot loop.
 This is the engine's scale path (the analog of the reference's
 ``new Function`` JIT moment, /root/reference/src/compiler.js:294-311): the
 schema is walked once on the driver; every keyword check partial-evaluates
-into literals inside one ``select`` projection; Catalyst constant-folds and
-whole-stage-codegens the lot.  Array elements are validated with
-higher-order functions (``transform``/``exists``/``filter``) — no explode,
-no shuffle, no UDF.
+into literals inside one ``select`` projection, which Catalyst
+constant-folds.  Array elements and map keys are validated with
+higher-order functions (``transform``/``aggregate``/``exists``/``filter``)
+— no explode, no shuffle, no UDF.  Those functions are ``CodegenFallback``:
+a projection that holds one (``DOCUMENT_SCHEMA``'s does) runs interpreted,
+and its ``Project`` carries no ``*(n)`` whole-stage-codegen marker in
+``explain()``; a schema without them compiles into the codegen stage.
 
 Semantics match ``schema.walker`` (the reference-parity oracle) with the
 typed-backend deviations documented in SURVEY.md §7:
@@ -107,20 +110,17 @@ def ref_step(compiler, schema, at_limit: Callable, body: Callable):
 class ColumnValidator:
     """Compile once, apply to any DataFrame with a matching typed schema.
 
-    ``errors(value, dtype, path)`` returns the ordered violation array for
-    *value* of Spark type *dtype*; ``apply(df)`` treats the whole row as the
-    instance object (columns = properties) and appends ``errors`` +
-    ``valid`` columns.
+    The one place a compiled schema becomes verdict columns.  Each row type
+    compiles to two trees over the same walk: the violation *count* (integer
+    fragments: no struct building, no to_json, no array allocation per row)
+    and the ordered *error-record* array.  ``apply(df)`` appends ``errors`` +
+    ``valid`` with the array gated behind the count; ``counted(df)`` appends
+    ``n_violations`` + ``valid`` from the count alone.  A caller that
+    routes or combines rows (``SchemaRegistry``, ``migration_impact``) takes
+    both trees from ``trees(row_type)`` and gates them with ``verdict``.
     """
 
-    def __init__(self, schema: dict, options: dict | None = None,
-                 count_only: bool = False):
-        #: count mode — the verdict fast path: every fragment is an INT
-        #: violation count instead of an array of error structs.  Same walk,
-        #: same conditions, but no struct building, no to_json stringify, no
-        #: array allocation per row — the whole pass stays in primitive
-        #: codegen.  apply() then emits (n_violations, valid).
-        self.count_only = count_only
+    def __init__(self, schema: dict, options: dict | None = None):
         self.schema_root = schema
         self.options = dict(options or {})
         self.messages = self.options.get("messages") or default_messages(lambda s: s)
@@ -139,53 +139,73 @@ class ColumnValidator:
         #: state — the analog of ctx.parent in the walker)
         self.parent_value: Column | None = None
         self.parent_dtype = None
-        #: row_type.json() -> compiled row expression (see row_errors)
-        self._compiled: dict[str, Column] = {}
+        #: compile-time state: True while the count tree is compiled (read by
+        #: the fragment helpers below)
+        self._count = False
+        #: (row_type.json(), count) -> compiled row tree (see _row)
+        self._compiled: dict[tuple[str, bool], Column] = {}
 
     # ------------------------------------------------------------------ api
 
-    def apply(self, df, errors_col: str = "errors", valid_col: str = "valid"):
-        errs = self.row_errors(df.schema)
-        if self.count_only:
-            return df.withColumn("n_violations", errs).withColumn(
-                valid_col, F.col("n_violations") == 0
-            )
-        return df.withColumn(errors_col, errs).withColumn(
-            valid_col, F.size(F.col(errors_col)) == 0
+    def apply(self, df):
+        """``df`` + ``errors`` + ``valid``, the error array gated behind the
+        violation count (see ``verdict``)."""
+        errors, valid = verdict(*self.trees(df.schema))
+        return df.withColumn("errors", errors).withColumn("valid", valid)
+
+    def counted(self, df):
+        """``df`` + ``n_violations`` + ``valid``, from the count tree only."""
+        return df.withColumn("n_violations", self._row(df.schema, count=True)).withColumn(
+            "valid", F.col("n_violations") == 0
         )
 
-    def errors(self, value: Column, dtype, path: Column) -> Column:
-        return self._node(self.schema_root, dtype, value, path, is_root=True)
+    def trees(self, row_type: T.StructType) -> tuple[Column, Column]:
+        """``(count, errors)`` of a whole row of ``row_type``: its violation
+        count and its ungated error-record array."""
+        return self._row(row_type, count=True), self._row(row_type, count=False)
 
-    def row_errors(self, row_type: T.StructType) -> Column:
-        """The violation expression of a whole row of ``row_type`` (columns
-        are the instance's properties).  Compiled on the first frame of a
-        row type and reused for every later one: the expression refers to
-        columns by name only, so any frame of that type can select it, and
-        rebuilding its py4j tree costs driver time on every call."""
-        key = row_type.json()
-        errs = self._compiled.get(key)
-        if errs is None:
+    def one_error(self, code: str, message: str, value: Column) -> Column:
+        """A one-record error array for a verdict reached outside the schema
+        (row-root path, no arg), e.g. a row no schema applies to."""
+        return self._single(
+            self._err(code, {}, value, T.StringType(), F.lit(""), message=message)
+        )
+
+    def _row(self, row_type: T.StructType, count: bool) -> Column:
+        """Compile the whole row (columns are the instance's properties) on
+        the first frame of a row type and reuse it for every later one: the
+        tree refers to columns by name only, so any frame of that type can
+        select it, and rebuilding its py4j tree costs driver time on every
+        call."""
+        key = (row_type.json(), count)
+        tree = self._compiled.get(key)
+        if tree is None:
             value = F.struct(*[F.col(f.name) for f in row_type.fields])
-            errs = self._compiled[key] = self.errors(value, row_type, F.lit(""))
-        return errs
+            self._count = count
+            try:
+                tree = self._compiled[key] = self._node(
+                    self.schema_root, row_type, value, F.lit(""), is_root=True
+                )
+            finally:
+                self._count = False
+        return tree
 
     # ------------------------------------------------------- error building
 
-    # fragment algebra: array mode concatenates error-struct arrays; count
-    # mode adds integer counts.  These helpers are where the two modes
-    # differ; keyword logic is shared (the exceptions are the three
-    # per-element keywords, whose count is a size formula, not a fold).
+    # fragment algebra: the error tree concatenates error-struct arrays; the
+    # count tree (``_count``) adds integer counts.  These helpers are where
+    # the two trees differ; keyword logic is shared (the exceptions are the
+    # three per-element keywords, whose count is a size formula, not a fold).
 
     def _frag_empty(self) -> Column:
-        return F.lit(0) if self.count_only else _empty()
+        return F.lit(0) if self._count else _empty()
 
     def _cat(self, frags: list[Column]) -> Column:
         if not frags:
             return self._frag_empty()
         if len(frags) == 1:
             return frags[0]
-        if self.count_only:
+        if self._count:
             out = frags[0]
             for f in frags[1:]:
                 out = out + f
@@ -194,10 +214,10 @@ class ColumnValidator:
 
     def _single(self, err: Column) -> Column:
         """An unconditional single violation."""
-        return F.lit(1) if self.count_only else F.array(err)
+        return F.lit(1) if self._count else F.array(err)
 
     def _is_ok(self, frag: Column) -> Column:
-        return (frag == 0) if self.count_only else (F.size(frag) == 0)
+        return (frag == 0) if self._count else (F.size(frag) == 0)
 
     def _gate(self, cond: Column, frag: Column) -> Column:
         """*frag* where *cond* holds, else the empty fragment."""
@@ -205,19 +225,21 @@ class ColumnValidator:
 
     def _fold(self, frags: Column) -> Column:
         """One fragment from an array of per-element fragments."""
-        if self.count_only:
+        if self._count:
             return F.aggregate(frags, F.lit(0), lambda acc, x: acc + x)
         return F.flatten(frags)
 
     def _err(self, code: str, node_schema: dict, value: Column, dtype,
-             path: Column, arg: Any = None) -> Column:
+             path: Column, arg: Any = None, message: str | None = None) -> Column:
         """Every violation record (code, message, value, arg, path) is made
-        here.  A node's ``messages`` entry for *code* wins over the
-        validator's message table."""
-        if self.count_only:  # never embedded; skip all struct/stringify work
+        here.  An explicit *message* wins, then a node's ``messages`` entry
+        for *code*, then the validator's message table."""
+        if self._count:  # never embedded; skip all struct/stringify work
             return F.lit(1)
         msgs = node_schema.get("messages")
-        if isinstance(msgs, dict) and code in msgs:
+        if message is not None:
+            msg = message
+        elif isinstance(msgs, dict) and code in msgs:
             msg = msgs[code]
         else:
             msg = self.messages.get(code)
@@ -465,7 +487,7 @@ class ColumnValidator:
     def _unique_items(self, schema, dtype: T.ArrayType, value, path) -> Column:
         # one error per duplicate occurrence (v4validator.js:277-290):
         # element i errors iff an equal element exists among the first i
-        if self.count_only:
+        if self._count:
             # occurrences beyond the first of each value == len - len(distinct)
             errs = F.size(value) - F.size(F.array_distinct(value))
         else:
@@ -631,7 +653,7 @@ class ColumnValidator:
                 tail = self._fold(
                     F.transform(rest, lambda x, i: self._node(additional, et, x, extra_path(i)))
                 )
-            elif self.count_only:
+            elif self._count:
                 tail = F.size(value) - n
             else:
                 tail = F.transform(
@@ -699,7 +721,7 @@ class ColumnValidator:
                     ),
                 )
                 frags.append(self._gate(present, self._fold(per_key)))
-            if additional is False:
+            if additional is False or isinstance(additional, dict):
                 declared_arr = F.array(*[F.lit(k) for k in props]) if props else F.array().cast("array<string>")
                 extra_keys = F.filter(
                     F.map_keys(value),
@@ -714,7 +736,15 @@ class ColumnValidator:
                         out = out & ~k.rlike(pat)
                     return out
 
-                if self.count_only:
+                if additional is not False:
+                    extra = self._fold(F.transform(
+                        extra_keys,
+                        lambda k: self._gate(
+                            unmatched(k),
+                            self._node(additional, vt, F.element_at(value, k), key_path(k)),
+                        ),
+                    ))
+                elif self._count:
                     extra = F.size(F.filter(extra_keys, unmatched))
                 else:
                     def per_extra(k):
@@ -732,6 +762,16 @@ class ColumnValidator:
         if not frags:
             return None
         return self._cat(frags)
+
+
+def verdict(count: Column, errors: Column) -> tuple[Column, Column]:
+    """``(errors, valid)`` of a row from its violation count and its
+    error-record array.  The array is gated behind the count, so valid rows
+    never build an error record.  ``valid`` is the gate's own condition, not
+    ``size(errors) = 0``: a filter on it is pushed below the projection, and
+    there it would build an invalid row's error array a second time."""
+    has_errors = F.coalesce(count > 0, F.lit(False))
+    return F.when(has_errors, errors).otherwise(_empty()), ~has_errors
 
 
 def validate_dataframe(df, schema: dict, options: dict | None = None):

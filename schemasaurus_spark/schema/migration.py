@@ -11,13 +11,14 @@ from ONE pass over the data.
 Design (scale notes):
 
 * Both schemas compile to native-Column predicate sets (``ColumnValidator``)
-  and land in the SAME projection — Catalyst collapses the two ``apply``
-  calls into one ``Project`` over one scan, so the corpus is read once and
-  both verdicts ride whole-stage codegen (asserted on the physical plan in
-  tests/test_migration.py).  Zero shuffles until the 4-row rollup.
+  and land in the SAME projection over one scan, so the corpus is read once
+  (asserted on the physical plan in tests/test_migration.py).  Each error
+  array is gated behind its schema's violation count.  Zero shuffles until
+  the 4-row rollup.
 * ``migration_matrix`` is the executive answer (at most 4 rows: the
   valid_old × valid_new transition counts) — one map-side-combined
-  aggregate over two booleans.
+  aggregate over two booleans.  The verdicts read the counts only, so the
+  optimizer prunes both error arrays out of it.
 * ``breaking_violations`` is the actionable answer: for documents the
   migration REGRESSES (valid under old, invalid under new) the exploded
   new-schema violation rows (code, JSON-pointer path, offending value,
@@ -32,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .columns import ColumnValidator
+from .columns import ColumnValidator, verdict
 
 
 def migration_impact(
@@ -50,22 +51,13 @@ def migration_impact(
     one's appended errors/valid columns as row fields — which a root
     ``additionalProperties: false`` schema (the north-rule flagship)
     would correctly reject, poisoning every verdict."""
-    from pyspark.sql import functions as F
-
     row_type = df.schema
-    value = F.struct(*[F.col(f.name) for f in row_type.fields])
-    errs_old = ColumnValidator(old_schema, options_old).errors(
-        value, row_type, F.lit("")
-    )
-    errs_new = ColumnValidator(new_schema, options_new).errors(
-        value, row_type, F.lit("")
-    )
-    return (
-        df.withColumn("errors_old", errs_old)
-        .withColumn("valid_old", F.size(F.col("errors_old")) == 0)
-        .withColumn("errors_new", errs_new)
-        .withColumn("valid_new", F.size(F.col("errors_new")) == 0)
-    )
+    errs_old, valid_old = verdict(*ColumnValidator(old_schema, options_old).trees(row_type))
+    errs_new, valid_new = verdict(*ColumnValidator(new_schema, options_new).trees(row_type))
+    return df.withColumns({
+        "errors_old": errs_old, "valid_old": valid_old,
+        "errors_new": errs_new, "valid_new": valid_new,
+    })
 
 
 def migration_matrix(

@@ -10,9 +10,10 @@ registry compiles EVERY version's schema through the same Column backend
 
 Scale shape: one scan, zero shuffles.  Per version the validator is a
 pure Column expression tree, so routing is
-``CASE WHEN version = v THEN <v's valid/errors expression> ...`` — every
+``CASE WHEN version = v THEN <v's count/errors expression> ...`` — every
 version's checks are evaluated lazily per row (Catalyst's CaseWhen is
-short-circuiting), all inside whole-stage codegen.  The alternative
+short-circuiting), and the routed error array is gated behind the routed
+violation count (``columns.verdict``).  The alternative
 (filter + validate + union per version) scans the corpus once PER
 VERSION; the CASE form is the one-pass fusion of it, identical output.
 Unknown versions fail closed: ``valid = false`` with a single
@@ -22,10 +23,10 @@ passing unversioned rows is how contract rot starts.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .columns import ColumnValidator
+from .columns import ColumnValidator, verdict
 
 __all__ = ["SchemaRegistry"]
 
@@ -50,30 +51,27 @@ class SchemaRegistry:
             raise ValueError(f"SchemaRegistry.validate: no column {version_col!r}")
         ver = F.col(version_col).cast("string")
 
-        # each compiled validator contributes its error-array expression
-        # over the SAME row struct; the CASE dispatch picks one per row —
-        # one scan, no union, no re-read.  valid falls out of the unified
-        # errors column (unknown versions carry one error, hence invalid).
-        row_type = df.schema
-        value = F.struct(*[F.col(f.name) for f in row_type.fields])
-        errors_expr = None
-        for v, cv in self._validators.items():
-            errs = cv.errors(value, row_type, F.lit(""))
-            cond = ver == F.lit(v)
-            errors_expr = (
-                F.when(cond, errs)
-                if errors_expr is None
-                else errors_expr.when(cond, errs)
-            )
-        unknown_err = F.array(
-            F.struct(
-                F.lit("schemaVersion").alias("code"),
-                F.lit("unregistered schema version").alias("message"),
-                F.coalesce(ver, F.lit("null")).alias("value"),
-                F.lit(None).cast("string").alias("arg"),
-                F.lit("").alias("path"),
-            )
+        # one CASE routes each row's violation count, one its error records,
+        # both over the SAME row struct — one scan, no union, no re-read.
+        # The records are gated behind the routed count, so a row evaluates
+        # its version's count once for both ``errors`` and ``valid``.  An
+        # unknown version counts as one violation, its record built by any
+        # version's validator.
+        trees = {v: cv.trees(df.schema) for v, cv in self._validators.items()}
+        any_validator = next(iter(self._validators.values()))
+        unknown = any_validator.one_error(
+            "schemaVersion", "unregistered schema version", F.coalesce(ver, F.lit("null"))
         )
-        return df.withColumn("errors", errors_expr.otherwise(unknown_err)).withColumn(
-            "valid", F.size(F.col("errors")) == 0
-        )
+        count = _route(ver, {v: n for v, (n, _) in trees.items()}, F.lit(1))
+        records = _route(ver, {v: e for v, (_, e) in trees.items()}, unknown)
+        errors, valid = verdict(count, records)
+        return df.withColumns({"errors": errors, "valid": valid})
+
+
+def _route(ver: Column, exprs: dict, otherwise: Column) -> Column:
+    """``CASE WHEN ver = v THEN exprs[v] ... ELSE otherwise END``."""
+    (v0, first), *rest = exprs.items()
+    out = F.when(ver == F.lit(v0), first)
+    for v, expr in rest:
+        out = out.when(ver == F.lit(v), expr)
+    return out.otherwise(otherwise)

@@ -27,6 +27,13 @@ def schema():
     return s
 
 
+def ungated(validator, df):
+    """``df`` + the ungated error-record array: the reference the gated
+    ``apply`` output and the count tree are checked against, since a gated
+    array is empty wherever the count says 0."""
+    return df.withColumn("errors", validator.trees(df.schema)[1])
+
+
 def walker_errors(schema, doc):
     res = new_validator(schema)(doc)
     return [
@@ -93,7 +100,7 @@ def test_violations_filter_skips_error_records(spark, docs, schema, tmp_path):
     """Over a parquet scan, the filter of ``violations(validated(df))`` is
     pushed below the validation projection.  It must test the error count
     only: an error-record struct there builds each invalid row's error array
-    once more.  The rows equal those of the unguarded error-array backend."""
+    once more.  The rows equal those of the ungated error array exploded."""
     p = str(tmp_path / "docs")
     docs.write.parquet(p)
     df = spark.read.parquet(p)
@@ -102,18 +109,20 @@ def test_violations_filter_skips_error_records(spark, docs, schema, tmp_path):
     conds = _filter_conditions(v)
     assert conds, "no Filter under violations()"
     assert all("struct(" not in c for c in conds), [c[:200] for c in conds]
-    want = job.violations(job.validated(df, guarded=False))
+    ref = ungated(job.validator, df).withColumn("valid", F.size("errors") == 0)
+    want = job.violations(ref)
     assert sorted(map(repr, v.collect())) == sorted(map(repr, want.collect()))
     assert v.count() > 0
 
 
 def test_count_mode_matches_error_arrays(spark, docs, schema):
-    """The verdict fast path (count_only) must produce exactly
+    """The verdict fast path (``counted``) must produce exactly
     size(errors) for every row of the generated corpus."""
     job = ValidationJob(schema)
+    ref = ungated(job.validator, docs).select(F.size("errors").alias("n")).collect()
     full = job.validated(docs).select(F.size("errors").alias("n")).collect()
     fast = job.counted(docs).select(F.col("n_violations").alias("n")).collect()
-    assert [r.n for r in full] == [r.n for r in fast]
+    assert [r.n for r in ref] == [r.n for r in full] == [r.n for r in fast]
     assert sum(r.n for r in full) > 0
 
 
@@ -141,14 +150,12 @@ def test_count_mode_structural_keywords(spark):
         ],
         "a int, b array<int>, c int, d int",
     )
-    full = ColumnValidator(schema).apply(df).select(F.size("errors").alias("n")).collect()
-    fast = (
-        ColumnValidator(schema, count_only=True)
-        .apply(df)
-        .select(F.col("n_violations").alias("n"))
-        .collect()
-    )
-    assert [r.n for r in full] == [r.n for r in fast]
+    v = ColumnValidator(schema)
+    ref = ungated(v, df).select(F.size("errors").alias("n")).collect()
+    full = v.apply(df).select(F.size("errors").alias("n")).collect()
+    fast = v.counted(df).select(F.col("n_violations").alias("n")).collect()
+    assert [r.n for r in ref] == [r.n for r in full] == [r.n for r in fast]
+    assert sum(r.n for r in ref) > 0
 
 
 # (schema, row DDL, instances): nodes whose error records were once made
@@ -163,6 +170,19 @@ WALKER_RECORD_CASES = {
         {"properties": {"m": {"properties": {"a": {}}, "additionalProperties": False}}},
         "m map<string,struct<x:int>>",
         [{"m": {"a": {"x": 0}, "k": {"x": 1}}}],
+    ),
+    "map_additional_schema": (
+        {
+            "properties": {
+                "m": {
+                    "properties": {"a": {"maximum": 1}},
+                    "patternProperties": {"^p": {"maximum": 2}},
+                    "additionalProperties": {"maximum": 3},
+                }
+            }
+        },
+        "m map<string,int>",
+        [{"m": {"k": 9, "j": 1}}, {"m": {"a": 5, "p1": 5, "k": 4}}, {"m": {}}, {}],
     ),
     "node_messages": (
         {
@@ -208,10 +228,97 @@ def test_error_records_match_walker(spark, case):
         for inst in instances
     ]
     assert any(want)
-    full = ColumnValidator(schema).apply(df).collect()
-    assert [[tuple(e) for e in r.errors] for r in full] == want
-    fast = ColumnValidator(schema, count_only=True).apply(df).collect()
+    v = ColumnValidator(schema)
+    for out in (ungated(v, df), v.apply(df)):
+        assert [[tuple(e) for e in r.errors] for r in out.collect()] == want
+    fast = v.counted(df).collect()
     assert [r.n_violations for r in fast] == [len(w) for w in want]
+
+
+# -- every caller routes through ColumnValidator's guarded build ------------
+
+ROUTE_SCHEMA = {"properties": {"n": {"type": "integer", "maximum": 10}}}
+ROUTE_DDL = "doc_id string, schema_version string, n bigint"
+ROUTE_ROWS = [("a", "1", 5), ("b", "1", 50), ("c", "9", 5)]
+
+
+def _projection(df, name):
+    """The expression of column ``name`` in the top Project of ``df``'s
+    optimized plan."""
+    exprs = df._jdf.queryExecution().optimizedPlan().projectList()
+    for e in (exprs.apply(i) for i in range(exprs.size())):
+        if e.name() == name:
+            return e.child() if e.nodeName() == "Alias" else e
+    raise AssertionError(f"no {name} in the top projection")
+
+
+def _find(expr, node_name):
+    """The first node named ``node_name`` in ``expr``, depth first."""
+    if expr.nodeName() == node_name:
+        return expr
+    for i in range(expr.children().size()):
+        found = _find(expr.children().apply(i), node_name)
+        if found is not None:
+            return found
+    return None
+
+
+def _gated(errors):
+    """True when ``errors`` is ``CASE WHEN <count test> THEN <records> ELSE
+    [] END`` and the count test builds no error record."""
+    if errors.nodeName() != "CaseWhen" or errors.branches().size() != 1:
+        return False
+    cond = errors.branches().apply(0)._1().toString()
+    return "struct(code" not in cond and errors.elseValue().get().toString() == "[]"
+
+
+def test_validate_dataframe_gates_errors(spark):
+    from schemasaurus_spark.schema.columns import validate_dataframe
+
+    out = validate_dataframe(spark.createDataFrame(ROUTE_ROWS, ROUTE_DDL), ROUTE_SCHEMA)
+    assert _gated(_projection(out, "errors"))
+    assert "struct(code" not in _projection(out, "valid").toString()
+    assert [(r.valid, [e.code for e in r.errors]) for r in out.collect()] == [
+        (True, []), (False, ["maximum"]), (True, []),
+    ]
+
+
+def test_registry_gates_every_version(spark):
+    from schemasaurus_spark.schema.registry import SchemaRegistry
+
+    tight = {"properties": {"n": {"type": "integer", "maximum": 1}}}
+    reg = SchemaRegistry({"1": ROUTE_SCHEMA, "2": tight})
+    out = reg.validate(spark.createDataFrame(ROUTE_ROWS, ROUTE_DDL))
+    # one routed count gates one routed record array, and ``valid`` is that
+    # gate's own condition, so a row evaluates its version's count once
+    errors = _projection(out, "errors")
+    assert _gated(errors)
+    records = errors.branches().apply(0)._2()
+    assert records.nodeName() == "CaseWhen" and records.branches().size() == 2
+    count = _find(errors.branches().apply(0)._1(), "CaseWhen")
+    assert count.branches().size() == 2
+    valid = _projection(out, "valid")
+    assert count.semanticEquals(_find(valid, "CaseWhen"))
+    unknown = out.where("doc_id = 'c'").first()
+    assert not unknown.valid
+    assert [tuple(e) for e in unknown.errors] == [
+        ("schemaVersion", "unregistered schema version", "9", None, "")
+    ]
+
+
+def test_count_only_callers_build_no_error_records(spark):
+    from schemasaurus_spark.plans.pipeline import CorpusPipeline
+    from schemasaurus_spark.schema.migration import migration_matrix
+
+    df = spark.createDataFrame(ROUTE_ROWS, ROUTE_DDL)
+    tight = {"properties": {"n": {"type": "integer", "maximum": 1}}}
+    matrix = migration_matrix(df, ROUTE_SCHEMA, tight)
+    kept = CorpusPipeline(schema=ROUTE_SCHEMA).valid_docs(df)
+    for out in (matrix, kept):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "struct(code" not in plan, plan[:300]
+    assert sorted(tuple(r) for r in matrix.collect()) == [(False, False, 1), (True, False, 2)]
+    assert sorted(r.doc_id for r in kept.collect()) == ["a", "c"]
 
 
 def test_span_sequence_invariant(spark, docs):

@@ -58,9 +58,9 @@ def test_apply_compiles_once_per_row_type(spark, compiles):
     assert len(compiles) > n
     assert _codes(wider) == want
 
-    fast = ColumnValidator(CUSTOM_SCHEMA, OPTIONS, count_only=True)
+    fast = ColumnValidator(CUSTOM_SCHEMA, OPTIONS)
     counts = [
-        {r.password: r.n_violations for r in fast.apply(spark.createDataFrame(ROWS, DDL)).collect()}
+        {r.password: r.n_violations for r in fast.counted(spark.createDataFrame(ROWS, DDL)).collect()}
         for _ in range(2)
     ]
     assert counts[0] == counts[1] == {"gandalf": 1, "qwerty": 2, "mellon": 0}

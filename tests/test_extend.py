@@ -85,7 +85,7 @@ def test_columns_extend_fixture(spark):
     assert paths["gandalf"] == ["/password"]
 
     # count-only fast path agrees (extensions share the fragment algebra)
-    fast = ColumnValidator(SCHEMA, opts, count_only=True).apply(df).collect()
+    fast = ColumnValidator(SCHEMA, opts).counted(df).collect()
     assert {r.password: r.n_violations for r in fast} == {
         "gandalf": 1, "qwerty": 1, "mellon": 0,
     }

@@ -203,15 +203,15 @@ def test_fuzz_walker_vs_columns_vs_count(spark, seed):
         expected = [walker_errors(validator, inst) for inst in instances]
 
         df = spark.createDataFrame([to_spark_row(i) for i in instances], ROW_TYPE)
-        full = ColumnValidator(schema).apply(df).select("errors", "valid").collect()
-        counted = (
-            ColumnValidator(schema, count_only=True)
-            .apply(df)
-            .select("n_violations", "valid")
-            .collect()
-        )
+        v = ColumnValidator(schema)
+        full = v.apply(df).select("errors", "valid").collect()
+        # the ungated array: apply's is empty wherever the count says 0
+        ref = df.select(v.trees(df.schema)[1].alias("errors")).collect()
+        counted = v.counted(df).select("n_violations", "valid").collect()
         for k, (inst, exp) in enumerate(zip(instances, expected)):
             ctx = f"seed={seed} schema#{si}={schema} instance#{k}={inst}"
+            got = [(e.code, e.path) for e in ref[k].errors]
+            assert got == exp, f"ungated columns != walker: {got} vs {exp}\n{ctx}"
             got = [(e.code, e.path) for e in full[k].errors]
             assert got == exp, f"columns != walker: {got} vs {exp}\n{ctx}"
             assert full[k].valid == (not exp), ctx
